@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import skew
+
 M_PER_DEG_LAT = 110_540.0
 M_PER_DEG_LON_EQ = 111_320.0
 
@@ -72,7 +74,7 @@ def overlap_join(
     # input.  An explicit repartition on the bucket keys (exempt from AQE
     # byte-based coalescing) + shuffled-hash join spreads the pair work over
     # the session's shuffle width; neither side broadcasts at 100 TB anyway.
-    n_parts = int(a.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = skew.shuffle_width(a.sparkSession)
     aa = aa.repartition(n_parts, "bx", "by").hint("shuffle_hash")
     bb = bb.repartition(n_parts, "bx", "by").hint("shuffle_hash")
     j = aa.join(bb, ["bx", "by"]).filter(

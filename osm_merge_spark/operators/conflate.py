@@ -22,7 +22,8 @@ Scale design (the part the reference lacks):
   from the threshold + zoom + latitude band (grid.ring_for_threshold);
 - hot cells are handled twice over: AQE skew-join splitting is enabled in the
   session, and an optional explicit salt (frequency pre-pass → per-cell salt
-  factor, broadcast) splits pathological cells before the shuffle;
+  factor inlined as a literal map lookup, ``plans/skew.py:hot_factor``)
+  splits pathological cells before the shuffle;
 - candidate pairs are deduped with a groupBy on (ext_id, way_id) *before* the
   expensive exact kernels run, so each pair is scored once;
 - everything after the join is whole-stage-codegen Column math except the
@@ -36,14 +37,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .. import geometry as G
 from .. import grid
 from ..functions import tags as TG
+from ..plans import skew
 
 # reference defaults (`conflator.py:94,201-203,1081`; `conflatePOI.py:73`)
 DEFAULT_THRESHOLD_M = 7.0
@@ -68,16 +69,14 @@ LENGTH_MISMATCH_M = 1000.0
 # candidate beyond the threshold is dropped by the exact kernel refine.
 DEFAULT_CONFLATE_ZOOM = 16
 
-# Shuffled-hash-join hint for the cell join (guide §3.1): the banded cover
-# table could never be broadcast at scale, and SHJ skips the two full sorts
-# a sort-merge join pays on the fattest exchange of the pipeline.  AQE skew
-# splitting applies to SHJ as well.
-CELL_JOIN_SHJ = True
-# Payload/attach joins (narrow id-keyed dims, too big to broadcast at
-# scale): interleaved A/B rounds at both bench corpus sizes showed hinting
-# ALL pipeline joins to shuffled-hash fastest (OPTIMIZATION_r06.md) — SMJ's
-# sorts buy nothing the downstream aggregations need.
-PAYLOAD_JOIN_SHJ = True
+# Every join of the pipeline is hinted shuffled-hash (guide §3.1): the
+# banded cover table could never be broadcast at scale, and SHJ skips the two
+# full sorts a sort-merge join pays on the fattest exchange of the pipeline
+# (AQE skew splitting applies to SHJ as well).  For the payload/attach joins
+# (narrow id-keyed dims, too big to broadcast at scale) interleaved A/B
+# rounds at both bench corpus sizes showed all-SHJ fastest
+# (OPTIMIZATION_r06.md) — SMJ's sorts buy nothing the downstream
+# aggregations need.
 
 
 # ---------------------------------------------------------------------------
@@ -143,40 +142,6 @@ def with_cells(
     if keep_bbox:
         out = out.withColumn("bbox", F.col("__cov.bbox"))
     return out.drop("__cov")
-
-
-# ---------------------------------------------------------------------------
-# Explicit salting (hot-cell split)
-# ---------------------------------------------------------------------------
-
-
-def salt_factors(cell_counts: DataFrame, hot_threshold: int = 5000, max_salt: int = 16) -> DataFrame:
-    """Frequency pre-pass → per-cell salt factor table (cells below the hot
-    threshold are absent = factor 1).  Tiny (only hot cells), broadcastable."""
-    return (
-        cell_counts.filter(F.col("cnt") > hot_threshold)
-        .select(
-            "cell",
-            F.least(F.ceil(F.col("cnt") / hot_threshold), F.lit(max_salt)).cast("int").alias("salt_n"),
-        )
-    )
-
-
-def apply_salt(big: DataFrame, small: DataFrame, salts: DataFrame, big_key: str) -> tuple[DataFrame, DataFrame]:
-    """Split hot cells: big side gets salt = hash(id) % salt_n; small side is
-    replicated across all salt values of its cell (replicate-small pattern).
-    Join key becomes (cell, salt)."""
-    b = (
-        big.join(F.broadcast(salts), "cell", "left")
-        .withColumn("salt", F.coalesce(F.pmod(F.hash(F.col(big_key)), F.col("salt_n")), F.lit(0)))
-        .drop("salt_n")
-    )
-    s = (
-        small.join(F.broadcast(salts), "cell", "left")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.coalesce(F.col("salt_n"), F.lit(1)) - 1)))
-        .drop("salt_n")
-    )
-    return b, s
 
 
 # ---------------------------------------------------------------------------
@@ -294,63 +259,29 @@ def candidate_pairs(
         "way_id", "cell", F.col("bbox").alias("bbox_s")
     )
 
-    def cell_join(left, right, keys):
-        if CELL_JOIN_SHJ:
-            return left.join(right.hint("shuffle_hash"), keys)
-        return left.join(right, keys)
-
+    # Replicate-small salt (r6): cells of the secondary side above
+    # ``salt_hot_threshold`` split into n = salt factor sub-cells by way id,
+    # and the primary side's rows in such a cell replicate to all n.  The
+    # density pre-pass counts a cheap first-vertex proxy in pure Column math
+    # rather than a second full cover pass (UDF + explode) over the
+    # secondary side: salting is pure partitioning — any density estimate
+    # yields identical results, and the residual skew a proxy misses is AQE
+    # skew-join's job.
+    n_salt = None
     if salt_hot_threshold:
-        # density pre-pass for the salt map (r6): counts come from a cheap
-        # first-vertex proxy in pure Column math rather than a second full
-        # cover pass (UDF + explode) over the secondary side.  Salting is
-        # pure partitioning — any density estimate yields identical results,
-        # and the residual skew a proxy misses is AQE skew-join's job.
-        # The map is a tiny top-K aggregate collected to the driver and
-        # inlined as literal expressions (the repo's salt-map pattern): the
-        # broadcast-join formulation cost three extra serially-materialized
-        # AQE stages (short-circuit count, broadcast build, left join) per
-        # conflation — pure latency on every probe run.  The top-K cap
-        # bounds driver memory at any corpus size; cells beyond the cap
-        # stay unsalted (identical results, AQE skew-join mops up).
         proxy = secondary.select(
             grid.cell_id_col(
                 F.element_at("geom", 1), F.element_at("geom", 2), zoom
             ).alias("cell")
         )
-        hot = (
-            proxy.groupBy("cell")
-            .agg(F.count("*").alias("cnt"))
-            .filter(F.col("cnt") > salt_hot_threshold)
-            .orderBy(F.desc("cnt"), "cell")
-            .limit(4096)
-            .collect()
-        )
-        if not hot:
-            joined = cell_join(p, s, "cell")
-        else:
-            entries: list = []
-            for r in hot:
-                n = min(-(-r["cnt"] // salt_hot_threshold), 16)
-                entries += [F.lit(r["cell"]), F.lit(int(n))]
-            salt_map = F.create_map(*entries)
-            s2 = s.withColumn(
-                "salt",
-                F.coalesce(
-                    F.pmod(F.hash(F.col("way_id")), F.element_at(salt_map, F.col("cell"))),
-                    F.lit(0),
-                ),
-            )
-            p2 = p.withColumn(
-                "salt",
-                F.explode(
-                    F.sequence(
-                        F.lit(0), F.coalesce(F.element_at(salt_map, F.col("cell")), F.lit(1)) - 1
-                    )
-                ),
-            )
-            joined = cell_join(p2, s2, ["cell", "salt"])
+        n_salt = skew.hot_factor(proxy, ["cell"], salt_hot_threshold, cap=16)
+    if n_salt is None:
+        joined = p.join(s.hint("shuffle_hash"), "cell")
     else:
-        joined = cell_join(p, s, "cell")
+        # coalesce: a non-nullable join key adds no inferred isnotnull filter
+        s = s.withColumn("salt", F.coalesce(F.pmod(F.hash(F.col("way_id")), n_salt), F.lit(0)))
+        p = p.withColumn("salt", F.explode(F.sequence(F.lit(0), n_salt - 1)))
+        joined = p.join(s.hint("shuffle_hash"), ["cell", "salt"])
 
     # JVM-side bbox-gap prefilter: equirectangular bbox distance lower-bounds
     # the true distance, so pairs whose boxes sit further apart than the
@@ -386,16 +317,14 @@ def candidate_pairs(
     # hash to different cell-join tasks, so almost no duplicates met inside
     # one task.  Explicit width: the pair stream is narrow in bytes but
     # quadratic-ish in rows, the case AQE's byte-based coalescing missizes.
-    n_parts = int(primary.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     pairs = (
         joined.select("ext_id", "way_id")
-        .repartition(n_parts, "ext_id")
+        .repartition(skew.shuffle_width(primary.sparkSession), "ext_id")
         .dropDuplicates(["ext_id", "way_id"])
     )
-    if PAYLOAD_JOIN_SHJ:
-        p_payload = p_payload.hint("shuffle_hash")
-        s_payload = s_payload.hint("shuffle_hash")
-    return pairs.join(p_payload, "ext_id").join(s_payload, "way_id")
+    return pairs.join(p_payload.hint("shuffle_hash"), "ext_id").join(
+        s_payload.hint("shuffle_hash"), "way_id"
+    )
 
 
 def score_pairs(pairs: DataFrame, threshold_m: float = DEFAULT_THRESHOLD_M) -> DataFrame:
@@ -506,11 +435,9 @@ def conflate(
         "ext_id", F.col("tags").alias("tags_p"), F.col("geom").alias("geom_p")
     )
     s_att = secondary.select("way_id", F.col("tags").alias("tags_s"), "version")
-    if PAYLOAD_JOIN_SHJ:
-        p_att, s_att = p_att.hint("shuffle_hash"), s_att.hint("shuffle_hash")
     conflated = (
-        best.join(p_att, "ext_id")
-        .join(s_att, "way_id")
+        best.join(p_att.hint("shuffle_hash"), "ext_id")
+        .join(s_att.hint("shuffle_hash"), "way_id")
         .select(
             "ext_id",
             "way_id",

@@ -20,9 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions import text as TX
+from ..plans import skew
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -68,22 +68,14 @@ def minhash_lsh_pairs(
     - the token-hash fold is projected ONCE into ``__hs`` (Catalyst does not
       CSE lambda higher-order functions, so the single-expression signature
       form re-ran the per-character fold k times per row);
-    - **hot-bucket triangle decomposition**: a bucket with B members emits
-      B² join rows from ONE task (a boilerplate-heavy corpus routinely has a
-      mega-bucket — the bench corpus puts 77% of docs in one bucket), and
-      AQE skew-join cannot help because the *input* partition is tiny in
-      bytes while the *output* is quadratic.  A count pre-pass finds buckets
-      above ``hot_bucket_rows`` (top-K collected salt map, the conflate
-      hot-cell salt pattern); members of a hot bucket get a deterministic
-      sub-block
-      ``blk = pmod(xxhash64(id), nb)`` and the self-join becomes a join on
-      (band, bucket, i, j) over the upper triangle of block pairs: the left
-      side owns blocks i = blk..nb-1 as the row side, the right side blocks
-      j = 0..blk as the column side, so every unordered pair lands in
-      exactly one (i ≤ j) task and the quadratic work spreads over
-      nb·(nb+1)/2 tasks.  Cold buckets keep nb = 1, which degenerates to
-      the plain self-join — the decomposition is pure partitioning and the
-      output is bit-identical;
+    - **hot-bucket triangle decomposition** (``plans/skew.py:
+      self_pairs_blocked``): a bucket with B members emits B² join rows
+      from ONE task (a boilerplate-heavy corpus routinely has a
+      mega-bucket — the bench corpus puts 77% of docs in one bucket), so
+      buckets above ``hot_bucket_rows`` split into at most ``max_blocks``
+      sub-blocks whose i ≤ j block pairs run as separate tasks; the output
+      is bit-identical.  Eager: the hot-bucket pre-pass runs one Spark job
+      when this function is called;
     - the banded table is persisted: it feeds the count pre-pass and both
       join sides, and recomputing the signature subtree three times was the
       next-largest cost after the join itself;
@@ -127,67 +119,7 @@ def minhash_lsh_pairs(
     # three consumers below (count pre-pass + both join sides) — persist so
     # the signature fold runs once per doc, not three times
     banded = banded.persist()
-    # Hot-bucket salt map: a tiny top-K aggregate collected to the driver and
-    # inlined as a literal map (the same legitimate small-aggregate collect as
-    # the conflation salt map / pack offsets).  An inline lookup keeps the
-    # plan a straight line — the broadcast-join formulation added two serial
-    # AQE stage materializations (counts exchange + broadcast build) that
-    # cost more wall than the whole pair join on a warmed session.  The
-    # top-K cap bounds driver memory at any corpus size; buckets beyond the
-    # cap simply stay unsplit (less parallelism, identical output).
-    hot_rows = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > hot_bucket_rows)
-        .orderBy(F.desc("cnt"), "band", "bucket")
-        .limit(4096)
-        .collect()
-    )
-    if hot_rows:
-        entries: list = []
-        for r in hot_rows:
-            nb = min(-(-r["cnt"] // hot_bucket_rows), max_blocks)
-            entries += [F.lit(f"{r['band']}:{r['bucket']}"), F.lit(int(nb))]
-        nb_expr = F.coalesce(
-            F.element_at(
-                F.create_map(*entries),
-                F.concat_ws(":", F.col("band"), F.col("bucket")),
-            ),
-            F.lit(1),
-        )
-    else:
-        nb_expr = F.lit(1)
-    b2 = banded.withColumn("nb", nb_expr).withColumn(
-        "blk", F.pmod(F.xxhash64(F.col(id_col)), F.col("nb")).cast("int")
-    )
-    left = b2.withColumn("j", F.explode(F.sequence(F.col("blk"), F.col("nb") - 1))).select(
-        F.col(id_col).alias("id_a"), "band", "bucket", F.col("blk").alias("i"), "j"
-    )
-    right = b2.withColumn("i", F.explode(F.sequence(F.lit(0), F.col("blk")))).select(
-        F.col(id_col).alias("id_b"), "band", "bucket", "i", F.col("blk").alias("j")
-    )
-    # AQE coalescing sizes post-shuffle partitions by INPUT bytes; this join's
-    # inputs are tiny (ids + band keys) while its output is quadratic in the
-    # bucket size, so left alone AQE collapses the whole pair generation —
-    # triangle blocks included — into one task.  An explicit user repartition
-    # on the join keys is exempt from coalescing and already satisfies the
-    # join's required distribution, so no further exchange is added; the
-    # width follows the session's shuffle-partition setting (scale-adaptive,
-    # not a local constant).
-    n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    left = left.repartition(n_parts, "band", "bucket", "i", "j")
-    right = right.repartition(n_parts, "band", "bucket", "i", "j")
-    pairs = (
-        left.hint("shuffle_hash")
-        .join(right.hint("shuffle_hash"), ["band", "bucket", "i", "j"])
-        # diagonal blocks see both orderings (keep a<b); off-diagonal blocks
-        # see each unordered pair once in arbitrary order (canonicalize)
-        .filter((F.col("i") != F.col("j")) | (F.col("id_a") < F.col("id_b")))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-    )
+    pairs = skew.self_pairs_blocked(banded, ["band", "bucket"], id_col, hot_bucket_rows, max_blocks)
     if sort_ready:
         pairs = pairs.repartitionByRange("id_a", "id_b")
     return pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
@@ -264,57 +196,11 @@ def simhash64_pairs(
     # near-identical corpora put most docs in one band bucket, and the plain
     # self-join then emits the whole quadratic pair space from one task
     # (AQE sizes partitions by input bytes and cannot see quadratic output).
-    # hamming(a, b) is symmetric, so the off-diagonal least/greatest
-    # canonicalization leaves the output unchanged.
+    # Eager: the hot-bucket pre-pass runs one Spark job when called.
     banded = banded.persist()
-    hot = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 256)
-        .orderBy(F.desc("cnt"), "band", "bucket")
-        .limit(4096)
-        .collect()
-    )
-    if hot:
-        entries: list = []
-        for r in hot:
-            entries += [F.lit(f"{r['band']}:{r['bucket']}"), F.lit(int(min(-(-r["cnt"] // 256), 64)))]
-        nb_expr = F.coalesce(
-            F.element_at(
-                F.create_map(*entries), F.concat_ws(":", F.col("band"), F.col("bucket"))
-            ),
-            F.lit(1),
-        )
-    else:
-        nb_expr = F.lit(1)
-    b2 = banded.withColumn("nb", nb_expr).withColumn(
-        "sb", F.pmod(F.xxhash64(F.col(id_col)), F.col("nb")).cast("int")
-    )
-    a = b2.withColumn("j", F.explode(F.sequence(F.col("sb"), F.col("nb") - 1))).select(
-        F.col(id_col).alias("id_a"), F.col("blk").alias("blk_a"), "band", "bucket",
-        F.col("sb").alias("i"), "j",
-    )
-    b = b2.withColumn("i", F.explode(F.sequence(F.lit(0), F.col("sb")))).select(
-        F.col(id_col).alias("id_b"), F.col("blk").alias("blk_b"), "band", "bucket",
-        "i", F.col("sb").alias("j"),
-    )
-    n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = (
-        a.repartition(n_parts, "band", "bucket", "i", "j")
-        .hint("shuffle_hash")
-        .join(
-            b.repartition(n_parts, "band", "bucket", "i", "j").hint("shuffle_hash"),
-            ["band", "bucket", "i", "j"],
-        )
-        .filter((F.col("i") != F.col("j")) | (F.col("id_a") < F.col("id_b")))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "blk_a",
-            "blk_b",
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = skew.self_pairs_blocked(
+        banded, ["band", "bucket"], id_col, 256, 64, payload=["blk"]
+    ).dropDuplicates(["id_a", "id_b"])
     hamming = sum(
         F.bit_count(F.element_at("blk_a", i + 1).bitwiseXOR(F.element_at("blk_b", i + 1)))
         for i in range(4)

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans import skew
+
 
 def dot(a: Column, b: Column) -> Column:
     """JVM-side dot product of two array<float|double> columns."""
@@ -58,7 +60,7 @@ def cosine_topk_bruteforce(
     # whole P·T kernel run in one task.  A keyless round-robin repartition of
     # the (tiny-in-bytes) target side spreads the quadratic work; the probe
     # side stays the broadcast side.
-    n_parts = int(targets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = skew.shuffle_width(targets.sparkSession)
     t = t.repartition(n_parts)
     j = p.crossJoin(t).filter(F.col(probe_id) != F.col(target_id))
     denom = F.col("p_norm") * F.col("t_norm")

@@ -35,6 +35,7 @@ from .operators import poi as P
 from .operators import similarity as S
 from .operators import spans as SP
 from .operators import tiling as TL
+from .plans import skew
 from .sources import synth
 
 Entry = tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -51,16 +52,6 @@ def register(name: str, sql: str | None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _nparts(spark: SparkSession) -> int:
-    """The session's shuffle width — used for explicit repartitions that must
-    not be AQE-coalesced by input BYTES when the per-row compute is heavy
-    (guide §2.5: AQE sizes partitions by bytes; expression-generated corpora
-    are narrow on disk but expensive per row, so byte-based coalescing
-    serializes the compute).  Scale-adaptive: follows the deployment's
-    configured shuffle parallelism, never a local constant."""
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +265,7 @@ def q_cell_histogram(spark, sf_dir):
     return (
         pts.withColumn("cx", cx)
         .withColumn("cy", cy)
-        .repartitionByRange(_nparts(spark), "cx", "cy")
+        .repartitionByRange(skew.shuffle_width(spark), "cx", "cy")
         .groupBy("cx", "cy")
         .agg(F.count("*").alias("cnt"))
         .orderBy("cx", "cy")
@@ -487,7 +478,7 @@ def q_tile_assign(spark, sf_dir):
     # range-partition the point table by the sort key up front: the tile
     # arithmetic runs at shuffle width and the final orderBy needs no second
     # exchange (filter/project preserve the range partitioning)
-    pts = customer_points(spark, sf_dir).repartitionByRange(_nparts(spark), "c_custkey")
+    pts = customer_points(spark, sf_dir).repartitionByRange(skew.shuffle_width(spark), "c_custkey")
     return (
         TL.assign_points_to_tiles(pts, -109.0, 37.0, -104.0, 40.5, tile_m=10_000.0)
         .select("c_custkey", "tile_id")
@@ -555,7 +546,7 @@ def q_fuzzy_match(spark, sf_dir):
     j = (
         c.join(s, c.c_nationkey == s.s_nationkey)
         .select("c_custkey", "s_suppkey", "c_name", "s_name")
-        .repartitionByRange(_nparts(spark), "c_custkey", "s_suppkey")
+        .repartitionByRange(skew.shuffle_width(spark), "c_custkey", "s_suppkey")
     )
     ratio = TG.fuzzy_ratio(F.col("c_name"), F.col("s_name"))
     return (
@@ -790,11 +781,8 @@ def q_ngram_jaccard(spark, sf_dir):
     intersect space — with both ~kB gram arrays attached — inside ONE task
     (AQE coalesces by input bytes and cannot see quadratic output).  Hot
     length buckets are triangle-decomposed into deterministic sub-blocks
-    (the operators/dedup.py:minhash_lsh_pairs pattern): every unordered
-    pair lands in exactly one i ≤ j block task, diagonal tasks keep
-    a < b, off-diagonal tasks canonicalize with least/greatest (the sizes
-    are symmetric), and the join inputs are explicitly repartitioned on the
-    block keys.  Output bit-identical; the operator-level production path
+    (``plans/skew.py:self_pairs_blocked``, eager: one pre-pass job at
+    build time).  Output bit-identical; the operator-level production path
     for this family remains ngram_jaccard_pairs_gated."""
     d = _t(spark, sf_dir, "documents")
     # int64 gram codes (TX.gram_codes: exact bijection) — the pair exchanges
@@ -805,48 +793,11 @@ def q_ngram_jaccard(spark, sf_dir):
         TX.gram_codes(TX.char_ngrams(F.col("text"), 3)).alias("grams"),
         F.floor(F.length("text") / 256).cast("long").alias("lb"),
     ).persist()
-    hot = (
-        g.groupBy("lb")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 128)
-        .orderBy(F.desc("cnt"), "lb")
-        .limit(4096)
-        .collect()
-    )
-    if hot:
-        entries: list = []
-        for r in hot:
-            entries += [F.lit(r["lb"]), F.lit(int(min(-(-r["cnt"] // 128), 64)))]
-        nb_expr = F.coalesce(
-            F.element_at(F.create_map(*entries), F.col("lb")), F.lit(1)
-        )
-    else:
-        nb_expr = F.lit(1)
-    gb = g.withColumn("nb", nb_expr).withColumn(
-        "blk", F.pmod(F.xxhash64("doc_id"), F.col("nb")).cast("int")
-    )
-    a = gb.withColumn("j", F.explode(F.sequence(F.col("blk"), F.col("nb") - 1))).select(
-        F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a"), "lb",
-        F.col("blk").alias("i"), "j",
-    )
-    b = gb.withColumn("i", F.explode(F.sequence(F.lit(0), F.col("blk")))).select(
-        F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b"), "lb",
-        "i", F.col("blk").alias("j"),
-    )
-    n = _nparts(spark)
-    pairs = (
-        a.repartition(n, "lb", "i", "j")
-        .hint("shuffle_hash")
-        .join(b.repartition(n, "lb", "i", "j").hint("shuffle_hash"), ["lb", "i", "j"])
-        .filter((F.col("i") != F.col("j")) | (F.col("id_a") < F.col("id_b")))
-    )
-    inter = F.size(F.array_intersect("g_a", "g_b"))
-    union = F.size("g_a") + F.size("g_b") - inter
+    pairs = skew.self_pairs_blocked(g, ["lb"], "doc_id", 128, 64, payload=["grams"])
+    inter = F.size(F.array_intersect("grams_a", "grams_b"))
+    union = F.size("grams_a") + F.size("grams_b") - inter
     out = pairs.select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        inter.alias("inter_size"),
-        union.alias("union_size"),
+        "id_a", "id_b", inter.alias("inter_size"), union.alias("union_size")
     ).filter(F.col("inter_size") * 2 >= F.col("union_size"))
     # materialization barrier (slim int rows): the sort's range-exchange
     # boundary sampling would otherwise re-execute the whole quadratic
@@ -1027,7 +978,7 @@ def q_text_stats(spark, sf_dir):
     # the parquet scan, the per-row tokenization runs at full shuffle width
     # (a single-file scan otherwise serializes it), and the final orderBy is
     # an in-partition sort with no second exchange
-    d = _t(spark, sf_dir, "documents").repartitionByRange(_nparts(spark), "doc_id")
+    d = _t(spark, sf_dir, "documents").repartitionByRange(skew.shuffle_width(spark), "doc_id")
     t1 = d.select("doc_id", "text", TX.tokens(F.col("text")).alias("__toks"))
     toks = F.col("__toks")
 
@@ -1291,7 +1242,7 @@ def q_span_signature(spark, sf_dir):
     # in-partition sort (no second exchange re-executing the codec for
     # boundary sampling)
     docs = synth.documents_spans(spark, sf_dir).repartitionByRange(
-        _nparts(spark), "doc_id"
+        skew.shuffle_width(spark), "doc_id"
     )
     out = SP.features_to_spans(SP.spans_to_features(docs))
     return out.select("doc_id", SP.span_signature("spans").alias("sig")).orderBy("doc_id")
@@ -3745,7 +3696,7 @@ def q_decontaminate(spark, sf_dir):
     # range-partition the scan by the sort key: the shingle fold runs at
     # shuffle width (single-file scan otherwise), the rollup's groupBy and
     # the final orderBy both reuse the range partitioning (no exchanges)
-    d = _t(spark, sf_dir, "documents").repartitionByRange(_nparts(spark), "doc_id")
+    d = _t(spark, sf_dir, "documents").repartitionByRange(skew.shuffle_width(spark), "doc_id")
     return CU.decontaminate(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),

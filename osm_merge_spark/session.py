@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .plans.skew import SHUFFLE_PARTITIONS
+
 
 def build_session(
     master: str | None = None,
@@ -26,9 +28,9 @@ def build_session(
         .config("spark.driver.memory", driver_memory)
     )
     if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        b = b.config(SHUFFLE_PARTITIONS, str(shuffle_partitions))
     s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     if not shuffle_partitions:
-        s.conf.set("spark.sql.shuffle.partitions", str(s.sparkContext.defaultParallelism * 2))
+        s.conf.set(SHUFFLE_PARTITIONS, str(s.sparkContext.defaultParallelism * 2))
     return s

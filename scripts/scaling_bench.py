@@ -110,7 +110,6 @@ def prepare() -> None:
     predicate prunes parquet row groups at scan time (min/max stats) —
     the on-disk layout a real deployment would use for strip ownership."""
     import bench
-    from pyspark.sql import functions as F
     from osm_merge_spark.plans import distribute as DST
 
     spark = bench.build_spark(16)
@@ -140,13 +139,13 @@ def prepare() -> None:
     # hot" ⇒ "no cell hot in any slice" — the skip is lossless.
     from osm_merge_spark import grid
     from osm_merge_spark.operators import conflate as C
+    from osm_merge_spark.plans import skew
 
     s_cells = C.with_cells(
         spark.read.parquet(OSM_T).select("way_id", "geom"), "geom", grid.DEFAULT_ZOOM, pad_m=0.0
     )
-    counts = s_cells.groupBy("cell").agg(F.count("*").alias("cnt"))
-    n_hot = C.salt_factors(counts, hot_threshold=SALT_HOT).limit(1).count()
-    spec["salt_hot_threshold"] = SALT_HOT if n_hot else None
+    hot = skew.hot_factor(s_cells, ["cell"], SALT_HOT, cap=16) is not None
+    spec["salt_hot_threshold"] = SALT_HOT if hot else None
     with open(BOUNDS, "w") as f:
         json.dump(spec, f)
     spark.stop()

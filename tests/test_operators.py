@@ -126,15 +126,17 @@ def test_minhash_lsh_hot_bucket_triangle_decomposition(spark):
     many sub-blocks) or not (threshold above the corpus size → the plain
     self-join).  The decomposition is pure partitioning: every unordered
     pair lands in exactly one (i <= j) block task, diagonal blocks filter
-    a < b, off-diagonal blocks canonicalize with least/greatest."""
+    a < b, off-diagonal blocks canonicalize with least/greatest.  NULL-id
+    rows in the hot bucket pair with nothing: canonicalizing a (NULL, x)
+    pair with least/greatest would fabricate an (x, x) self-pair."""
     n = 120
     texts = ["common shared boilerplate text body"] * (n - 2) + [
         "common shared boilerplate text body variant",
         "entirely different words nothing alike here at all",
     ]
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(range(1, n + 1)), "text": texts})
-    )
+    ids = list(range(1, n + 1)) + [None] * 3
+    texts += ["common shared boilerplate text body"] * 3
+    docs = spark.createDataFrame(list(zip(ids, texts)), "doc_id bigint, text string")
     split = (
         D.minhash_lsh_pairs(docs, k=4, bands=2, hot_bucket_rows=16, max_blocks=8)
         .toPandas()
@@ -148,6 +150,8 @@ def test_minhash_lsh_hot_bucket_triangle_decomposition(spark):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(split, plain)
+    assert split["id_a"].notna().all() and split["id_b"].notna().all()
+    assert (split["id_a"] < split["id_b"]).all()
     # the mega-bucket really is quadratic: all (n-2 choose 2) identical-doc
     # pairs appear, in both bands
     ident = split[(split["id_a"] <= n - 2) & (split["id_b"] <= n - 2)]

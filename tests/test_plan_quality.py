@@ -94,7 +94,8 @@ def test_salt_map_inlined_not_joined(spark):
     osm = synth.osm_ways(spark, SF)
     pairs = C.candidate_pairs(ext, osm, salt_hot_threshold=1)  # force hot path
     plan = plan_of(pairs)
-    assert "keys_from_map" in plan or "map_keys" in plan or "salt" in plan
+    # the factor is looked up in an inlined literal map on the join key
+    assert re.search(r"element_at\(map\(keys: \[[0-9,]+\], values: \[[0-9,]+\]\), cell#", plan)
     # exactly one join family remains: the (cell, salt) candidate join plus
     # the two id-keyed payload attaches — no extra join for salt factors
     assert plan.count("BroadcastHashJoin") == 0
