@@ -41,14 +41,21 @@ _MORTON_MASK = (np.int64(1) << _Z_SHIFT) - 1
 # Morton (Z-order) encoding: 29-bit x/y interleave, branch-free numpy.
 # ---------------------------------------------------------------------------
 
+# (shift, mask) steps of the log-step bit spread, widest first
+_SPREAD_STEPS = (
+    (16, 0x0000FFFF0000FFFF),
+    (8, 0x00FF00FF00FF00FF),
+    (4, 0x0F0F0F0F0F0F0F0F),
+    (2, 0x3333333333333333),
+    (1, 0x5555555555555555),
+)
+
+
 def _part1by1(v: np.ndarray) -> np.ndarray:
     """Spread the low 29 bits of v so there is a zero bit between each."""
     v = v.astype(np.uint64) & np.uint64(0x1FFFFFFF)
-    v = (v | (v << np.uint64(16))) & np.uint64(0x0000FFFF0000FFFF)
-    v = (v | (v << np.uint64(8))) & np.uint64(0x00FF00FF00FF00FF)
-    v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    v = (v | (v << np.uint64(2))) & np.uint64(0x3333333333333333)
-    v = (v | (v << np.uint64(1))) & np.uint64(0x5555555555555555)
+    for shift, mask in _SPREAD_STEPS:
+        v = (v | (v << np.uint64(shift))) & np.uint64(mask)
     return v
 
 
@@ -109,11 +116,13 @@ def cell_from_zxy(z: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
 
 
 def cell_id_col(lon, lat, z: int):
-    """Pure-Column twin of :func:`cell_id` for a constant (small) zoom —
-    the PARTITION-COLUMN path: computing the coarse cell JVM-side at write
+    """Pure-Column twin of :func:`cell_id` for a constant zoom — the
+    PARTITION-COLUMN path: computing the coarse cell JVM-side at write
     time lets ``partitionBy(cell)`` corpora prune files under an AOI cell
-    predicate.  Unrolled 2·z morton bits (linear in z; coarse zooms only —
-    the row-level index stays on the numpy kernel)."""
+    predicate.  The morton interleave is :func:`_part1by1`'s log-step
+    magic-mask spread, starting at the widest shift narrower than ``z``
+    (the wider steps are identities on a z-bit index), so building the
+    Column costs a few dozen JVM calls at any zoom."""
     from pyspark.sql import functions as F
 
     n = 1 << z
@@ -122,14 +131,14 @@ def cell_id_col(lon, lat, z: int):
     y = F.floor((1.0 - F.asinh(F.tan(F.radians(lat_c))) / float(np.pi)) / 2.0 * n)
     x = F.greatest(F.least(x, F.lit(n - 1)), F.lit(0)).cast("long")
     y = F.greatest(F.least(y, F.lit(n - 1)), F.lit(0)).cast("long")
-    morton = F.lit(0).cast("long")
-    for i in range(z):
-        morton = (
-            morton
-            .bitwiseOR(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
-            .bitwiseOR(F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-        )
-    return F.lit(z << _Z_SHIFT).cast("long").bitwiseOR(morton)
+
+    def spread(v):
+        for shift, mask in _SPREAD_STEPS:
+            if shift < z:
+                v = v.bitwiseOR(F.shiftleft(v, shift)).bitwiseAND(F.lit(mask))
+        return v
+
+    return F.lit(z << _Z_SHIFT).bitwiseOR(spread(x)).bitwiseOR(F.shiftleft(spread(y), 1))
 
 
 def parent_cell(cell: np.ndarray, parent_z: int) -> np.ndarray:

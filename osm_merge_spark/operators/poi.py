@@ -6,8 +6,12 @@ tolerance, consumer takes nearest — the PostGIS variant is
 dup finder `osm_merge/poidup.py:19-28`.
 
 Spark design: manufacture the cell equi-key at a zoom derived from the
-tolerance, ring-expand the probe side, hash-join, then haversine + window
-rank — all JVM-side Column math (no Python at all for point joins).
+tolerance, expand the target side to every cell its tolerance box touches,
+hash-join, then haversine + nearest pick — all JVM-side Column math (no
+Python at all for point joins).  The expansion sits on the targets, the
+streamed side: the probes are the broadcast build side, whose stage runs in
+a few tasks and whose size estimate must stay under the broadcast
+threshold (see knn_join).
 """
 
 from __future__ import annotations
@@ -31,8 +35,11 @@ def haversine_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Col
 
 
 def zoom_for_tolerance(tolerance_m: float, max_abs_lat: float = 60.0) -> int:
-    """Pick the deepest zoom whose (worst-case) cell edge still exceeds the
-    tolerance, so ring-1 expansion suffices — derived, not hard-coded."""
+    """Pick the deepest zoom whose cell edge at ``max_abs_lat`` still
+    exceeds the tolerance, so a target's tolerance box (×1.25 margin)
+    touches at most 3×3 cells below that latitude — derived, not
+    hard-coded.  (Above it the box spans more cells; results do not depend
+    on the zoom.)"""
     for z in range(24, 4, -1):
         if grid.cell_size_m(z, max_abs_lat) >= tolerance_m:
             return z
@@ -63,64 +70,64 @@ def knn_join(
 
     probes:  (probe_id, lon, lat, ...); targets: (target_id, lon, lat, ...).
     Returns probe columns + target id + ``dist`` + ``rank``.
-    Entirely JVM-side: cell equi-join (border-epsilon-expanded probes) +
-    haversine + rank window. Broadcast the target side by hinting upstream if
-    small.
+    Entirely JVM-side: cell equi-join + haversine + nearest pick.  Exact
+    for points within the mercator latitude range (|lat| ≤ 85.05112878).
 
-    Perf (optimization guide §2.3/§2.4, r6): probes previously exploded a
-    blanket 3×3 ring (9 rows per probe) and then paid a dropDuplicates
-    exchange.  Neighbor cells are now emitted only where the probe lies
-    within the tolerance (×1.25 safety margin for the local-scale
-    approximation) of that cell border — the same border-epsilon pattern the
-    conflation cover uses (grid.cover_polyline pad_m) — which is ~1-2 cells
-    per probe instead of 9, and the per-row array_distinct makes the
-    (probe, cell) rows unique by construction, so the dedupe exchange is
-    gone.  Candidate discovery is still a superset: a target within
-    tolerance of the probe can only lie in the base cell or across a border
-    that is itself within tolerance of the probe, so results are unchanged.
+    Each probe keys on its own cell; each target is expanded to every cell
+    its tolerance box touches (tolerance ×1.25 for the local-scale
+    approximation) — the border-epsilon pattern of the conflation cover
+    (grid.cover_polyline pad_m): 1 cell for an interior target, 2-4 near a
+    border, unique by construction, so no dedupe exchange.  Candidate
+    discovery is a superset: a probe within tolerance of a target lies in
+    a cell the target's box touches.
+
+    The expansion is on the targets because they are the streamed side;
+    the probes are the broadcast build side, whose stage runs in few tasks.
+    The mercator math (``ASINH``/``TAN``) runs once per target in a
+    projection of three helper columns (tile x, tile y, tolerance in
+    tiles), and the expansion reads only those columns through two
+    ``explode(sequence(...))``: no lambda, which Spark would evaluate
+    without generated code or shared subexpressions.  The probes get no
+    helper columns: three more would lift their size estimate past the
+    broadcast threshold and turn the join into a sort-merge join shuffling
+    both sides.  No broadcast hint: the probe side has no size bound at
+    scale.
     """
     z = zoom_for_tolerance(tolerance_m)
+    n = 1 << z
     p = probes.select(
         F.col(probe_id), F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat")
-    )
-    n = 1 << z
-    xf = (F.col("p_lon") + 180.0) / 360.0 * n
-    lat_c = F.least(F.greatest(F.col("p_lat"), F.lit(-85.05112878)), F.lit(85.05112878))
-    yf = (1.0 - F.asinh(F.tan(F.radians(lat_c))) / float(np.pi)) / 2.0 * n
-    base_x = F.floor(xf).cast("long")
-    base_y = F.floor(yf).cast("long")
-    fx = xf - F.floor(xf)
-    fy = yf - F.floor(yf)
-    # mercator is locally conformal: a zoom-z tile edge spans the same ground
-    # meters in x and y at the point's latitude
-    tile_m = F.lit(grid.EARTH_CIRCUMFERENCE_M) * F.cos(F.radians(lat_c)) / n
-    pad = F.lit(tolerance_m * 1.25) / tile_m  # tolerance as a tile-edge fraction
-    west, east = fx < pad, fx > 1.0 - pad
-    north, south = fy < pad, fy > 1.0 - pad
+    ).withColumn("cell", _cell_col(F.col("p_lon"), F.col("p_lat"), z))
 
-    def cell(dx: int, dy: int) -> Column:
-        x = F.pmod(base_x + dx, F.lit(n)) if dx else base_x
-        y = F.least(F.greatest(base_y + dy, F.lit(0)), F.lit(n - 1)) if dy else base_y
-        return (x * n + y).cast("long")
-
-    cand = F.array(
-        cell(0, 0),
-        F.when(west, cell(-1, 0)),
-        F.when(east, cell(1, 0)),
-        F.when(north, cell(0, -1)),
-        F.when(south, cell(0, 1)),
-        F.when(west & north, cell(-1, -1)),
-        F.when(west & south, cell(-1, 1)),
-        F.when(east & north, cell(1, -1)),
-        F.when(east & south, cell(1, 1)),
-    )
-    p = p.withColumn(
-        "cell", F.explode(F.array_distinct(F.filter(cand, lambda c: c.isNotNull())))
-    )
-
+    lat_c = F.least(F.greatest(F.col("t_lat"), F.lit(-85.05112878)), F.lit(85.05112878))
     t = targets.select(
         F.col(target_id), F.col("lon").alias("t_lon"), F.col("lat").alias("t_lat")
-    ).withColumn("cell", _cell_col(F.col("t_lon"), F.col("t_lat"), z))
+    ).select(
+        "*",
+        ((F.col("t_lon") + 180.0) / 360.0 * n).alias("__xf"),
+        ((1.0 - F.asinh(F.tan(F.radians(lat_c))) / float(np.pi)) / 2.0 * n).alias("__yf"),
+        # tolerance (×1.25 for the local-scale approximation) as a fraction
+        # of a tile edge: mercator is locally conformal, so a zoom-z tile
+        # spans the same ground meters in x and y at the target's latitude
+        (
+            F.lit(tolerance_m * 1.25)
+            / (F.lit(grid.EARTH_CIRCUMFERENCE_M) * F.cos(F.radians(lat_c)) / n)
+        ).alias("__pad"),
+    )
+    xf, yf, pad = F.col("__xf"), F.col("__yf"), F.col("__pad")
+    # every tile the target's tolerance box touches: x wraps at the
+    # antimeridian (at most n columns, so no duplicates), y clamps at the
+    # mercator edge; 1 cell for an interior target, 2-4 near a border
+    x0 = F.floor(xf - pad)
+    x1 = F.least(F.floor(xf + pad), x0 + (n - 1))
+    y0 = F.greatest(F.floor(yf - pad), F.lit(0))
+    y1 = F.least(F.floor(yf + pad), F.lit(n - 1))
+    point = [target_id, "t_lon", "t_lat"]
+    t = (
+        t.select(*point, F.explode(F.sequence(x0, x1)).alias("__x"), y0.alias("__y0"), y1.alias("__y1"))
+        .select(*point, "__x", F.explode(F.sequence("__y0", "__y1")).alias("__y"))
+        .select(*point, (F.pmod("__x", F.lit(n)) * n + F.col("__y")).cast("long").alias("cell"))
+    )
 
     joined = p.join(t, "cell").withColumn(
         "dist", haversine_col(F.col("p_lon"), F.col("p_lat"), F.col("t_lon"), F.col("t_lat"))

@@ -33,11 +33,14 @@ def bucket_of(col, n_buckets: int):
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
-    try:
-        lin = spark.read.parquet(lineage_path)
-    except Exception:
+    """Buckets already recorded for ``run_id``; empty on a fresh run, where
+    the lineage table does not exist yet.  Existence is asked of the Hadoop
+    FileSystem, so a fresh run reads nothing and logs no failed read."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
         return set()
-    rows = lin.filter(F.col("run_id") == run_id).select("bucket").distinct().collect()
+    rows = spark.read.parquet(lineage_path).filter(F.col("run_id") == run_id).select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
 
 

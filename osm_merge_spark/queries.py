@@ -19,7 +19,7 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,7 +35,7 @@ from .operators import poi as P
 from .operators import similarity as S
 from .operators import spans as SP
 from .operators import tiling as TL
-from .plans import skew
+from .plans import skew, stage
 from .sources import synth
 
 Entry = tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -752,6 +752,21 @@ def q_simhash(spark, sf_dir):
     )
 
 
+def _jaccard_half_pairs(pairs: DataFrame, grams_a: str, grams_b: str, n: Column) -> DataFrame:
+    """(id_a, id_b, inter_size, union_size) of the pairs whose distinct-gram
+    arrays have Jaccard >= 1/2; ``n`` = |A| + |B|, so |A∪B| = n − |A∩B|.
+    The intersect is projected once per pair: a plain filter on it would be
+    pushed into the pair join's condition with the intersect inlined, and
+    the output would compute it again (plans/stage.py)."""
+    sized = pairs.select(
+        "id_a", "id_b", F.size(F.array_intersect(grams_a, grams_b)).alias("inter_size"), n.alias("n")
+    )
+    union = F.col("n") - F.col("inter_size")
+    return stage.keep_where(sized, F.col("inter_size") * 2 >= union).select(
+        "id_a", "id_b", "inter_size", union.alias("union_size")
+    )
+
+
 @register(
     "q_ngram_jaccard",
     """
@@ -794,11 +809,7 @@ def q_ngram_jaccard(spark, sf_dir):
         F.floor(F.length("text") / 256).cast("long").alias("lb"),
     ).persist()
     pairs = skew.self_pairs_blocked(g, ["lb"], "doc_id", 128, 64, payload=["grams"])
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = F.size("grams_a") + F.size("grams_b") - inter
-    out = pairs.select(
-        "id_a", "id_b", inter.alias("inter_size"), union.alias("union_size")
-    ).filter(F.col("inter_size") * 2 >= F.col("union_size"))
+    out = _jaccard_half_pairs(pairs, "grams_a", "grams_b", F.size("grams_a") + F.size("grams_b"))
     # materialization barrier (slim int rows): the sort's range-exchange
     # boundary sampling would otherwise re-execute the whole quadratic
     # intersect pipeline a second time
@@ -912,11 +923,7 @@ def q_ngram_jaccard_gated(spark, sf_dir):
         cand.join(g.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a")), "id_a")
         .join(g.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b")), "id_b")
     )
-    inter = F.size(F.array_intersect("g_a", "g_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    out = pairs.select(
-        "id_a", "id_b", inter.alias("inter_size"), union.alias("union_size")
-    ).filter(F.col("inter_size") * 2 >= F.col("union_size"))
+    out = _jaccard_half_pairs(pairs, "g_a", "g_b", F.col("n_a") + F.col("n_b"))
     # materialization barrier (see q_ngram_jaccard): one execution of the
     # per-pair intersects; the sort samples the checkpointed slim rows
     return out.localCheckpoint().orderBy("id_a", "id_b")

@@ -13,12 +13,22 @@ YAML mapping plus hand-written special cases:
 
 Here the whole family is one engine: a :class:`ConverterSpec` declares
 column→tag renames, value code tables, and post-rules; :func:`convert`
-compiles the spec into a single narrow JVM-side projection (no shuffle, no
+compiles the spec into narrow JVM-side projections (no shuffle, no
 Python).  The MVUM-shaped spec below reproduces the reference's signature
 transforms: code tables for smoothness/surface (`mvum.py:167-186`),
 name title-casing + abbreviation expansion (`:150-166`), ref prefixing
 (`:193-230`), seasonal/opening-hours (`:69-109`), and vehicle →
 ``*=designated`` access tags (trails.py semantics).
+
+Every converter evaluates each heavy value once.  Name normalization is 15
+chained ``regexp_replace``; an expression that reads it ten times, or a
+lambda that re-reads a whole entry array per element (Spark evaluates
+lambda bodies without generated code or shared subexpressions), multiplies
+that cost.  So a value that several rules read is projected once into its
+own column, the tag map is built from column references
+(:func:`_with_tags`, no lambda), and a row filter on a projected column
+goes through ``plans.stage.keep_where`` so the optimizer cannot inline the
+projection back into it.
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import tags as TG
+from ..plans import stage
 
 
 @dataclass
@@ -77,8 +88,6 @@ class ConverterSpec:
     vehicle_cols: dict[str, str] = field(default_factory=dict)
     # first-match-wins regex extraction rules (grouped per src column)
     regex_rules: list[RegexRule] = field(default_factory=list)
-    # drop rows missing all of these output tags (`local_roads.py:169-170`)
-    require_tags: list[str] = field(default_factory=list)
 
 
 # The MVUM-shaped spec (`mvum.yaml` + special cases in mvum.py)
@@ -173,6 +182,10 @@ def _last_token(col: Column) -> Column:
     return F.regexp_extract(col, r"(\S+)\s*$", 1)
 
 
+def _out_cols(df: DataFrame, keep_cols: list[str] | None) -> list[str]:
+    return keep_cols if keep_cols is not None else [c for c in ("geom", "ext_id", "way_id") if c in df.columns]
+
+
 def local_roads_convert(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
     """County road inventory converter (`local_roads.py:89-182`), composed
     Column form (the ref consolidation — a CR number column PLUS an FS
@@ -183,12 +196,18 @@ def local_roads_convert(df: DataFrame, keep_cols: list[str] | None = None) -> Da
     - ``Fs <n>-<name>`` → ref ``FR <n>`` (appended ;-separated if a CR ref
       exists) + the remainder as the name (`:145-156`)
     - ``County Road <n>`` / ``Forest Road <n>`` names → CR/FR refs (`:157-168`)
-    - rows that end up with no ref are dropped (`:169-170`)
+    - rows that end up with no ref are dropped (`:169-170`), before the tag
+      map is built
 
     Expected columns: ``rd_num`` (int, nullable), ``road_name`` (string).
+    The normalized name is projected once and every rule reads that column.
     """
-    nn = TG.normalize_name(F.col("road_name"))
-    cr_num = F.when(F.col("rd_num").isNotNull(), F.concat(F.lit("CR "), F.col("rd_num").cast("string")))
+    out_cols = _out_cols(df, keep_cols)
+    staged = df.select(
+        *out_cols, F.col("rd_num").alias("__rd"), TG.normalize_name(F.col("road_name")).alias("__nn")
+    )
+    nn = F.col("__nn")
+    cr_num = F.when(F.col("__rd").isNotNull(), F.concat(F.lit("CR "), F.col("__rd").cast("string")))
     is_numeric = nn.rlike(r"^[0-9]+$")
     is_fs = nn.startswith("Fs ")
     fs_ref = F.concat(F.lit("FR "), F.regexp_extract(nn, r"^Fs (\S+?)(?:-| |$)", 1))
@@ -200,19 +219,18 @@ def local_roads_convert(df: DataFrame, keep_cols: list[str] | None = None) -> Da
         .when(is_fs, fs_ref)
         .when(county, F.regexp_replace(nn, r"^County Road", "CR"))
         .when(forest, F.regexp_replace(nn, r"^Forest Road", "FR"))
-        .otherwise(F.lit(None).cast("string"))
     )
-    ref = F.concat_ws(";", F.array_compact(F.array(cr_num, name_ref)))
-    ref = F.when(ref == "", F.lit(None).cast("string")).otherwise(ref)
+    ref = F.nullif(F.concat_ws(";", cr_num, name_ref), F.lit(""))  # concat_ws skips nulls
     name = (
         F.when(is_numeric, F.lit(None).cast("string"))
         .when(is_fs & (fs_name != ""), fs_name)
         .otherwise(nn)
     )
-    tags = _entries_to_tags([(F.lit("ref"), ref), (F.lit("name"), name)])
-    out_cols = keep_cols if keep_cols is not None else [c for c in ("geom", "ext_id", "way_id") if c in df.columns]
-    out = df.select(*out_cols, tags.alias("tags"))
-    return out.filter(F.map_contains_key("tags", F.lit("ref")))
+    refs = staged.select(*out_cols, ref.alias("__ref"), name.alias("__name"))
+    # a plain filter would be pushed below both projections with the whole
+    # name normalization inlined into its condition
+    kept = stage.keep_where(refs, F.col("__ref").isNotNull())
+    return _with_tags(kept, out_cols, [("ref", F.col("__ref")), ("name", F.col("__name"))])
 
 
 def osmhighways_filter(df: DataFrame, tags_col: str = "tags", keep_cols: list[str] | None = None) -> DataFrame:
@@ -238,21 +256,21 @@ def osmhighways_filter(df: DataFrame, tags_col: str = "tags", keep_cols: list[st
         .when(usfs.startswith("FSR "), F.concat(F.lit("FR "), _last_token(usfs)))
         .otherwise(F.concat(F.lit("FR "), _last_token(F.coalesce(name, F.lit("")))))
     )
-    ref = F.concat_ws(";", F.array_compact(F.array(cr, ur)))
-    ref = F.when(ref == "", F.lit(None).cast("string")).otherwise(ref)
+    ref = F.nullif(F.concat_ws(";", cr, ur), F.lit(""))  # concat_ws skips nulls
+    # the scrubbed map holds none of the rebuilt keys, so the rebuilt tags
+    # append to it
     base = F.map_filter(
         TG.drop_junk_tags(t),
         lambda k, v: ~k.isin("name", "ref", "ref:usfs"),
     )
-    extra = _entries_to_tags(
-        [
-            (F.lit("name"), F.when(county, F.lit(None).cast("string")).otherwise(name)),
-            (F.lit("ref"), ref),
-        ]
+    out_cols = _out_cols(df, keep_cols)
+    rebuilt = _with_tags(
+        df.withColumn("__base", base),
+        [*out_cols, "__base"],
+        [("name", F.when(county, F.lit(None).cast("string")).otherwise(name)), ("ref", ref)],
+        "__rebuilt",
     )
-    cleaned = F.map_zip_with(base, extra, lambda k, vb, ve: F.coalesce(ve, vb))
-    out_cols = keep_cols if keep_cols is not None else [c for c in ("geom", "ext_id", "way_id") if c in df.columns]
-    return df.select(*out_cols, cleaned.alias(tags_col))
+    return rebuilt.select(*out_cols, F.map_concat("__base", "__rebuilt").alias(tags_col))
 
 
 def _code_map_expr(col: Column, table: dict[str, str]) -> Column:
@@ -262,11 +280,13 @@ def _code_map_expr(col: Column, table: dict[str, str]) -> Column:
     return expr
 
 
-def _regex_rule_entries(df: DataFrame, rules: list[RegexRule]) -> list[tuple[Column, Column]]:
+def _regex_rule_entries(df: DataFrame, rules: list[RegexRule]) -> tuple[DataFrame, list[tuple[str, Column]]]:
     """Compile first-match-wins regex rules (per source column) into map
-    entries.  Each rule's value is gated on no earlier rule for the same
-    column having matched — the reference's if/continue ladder."""
-    entries: list[tuple[Column, Column]] = []
+    entries.  Each rule's value is gated on it being the first rule for its
+    column whose pattern matches — the reference's if/continue ladder.  The
+    index of that rule is projected once per column (returned ``df``), so
+    every entry reads a column instead of repeating the ladder's patterns."""
+    entries: list[tuple[str, Column]] = []
     by_src: dict[str, list[RegexRule]] = {}
     for r in rules:
         by_src.setdefault(r.src, []).append(r)
@@ -274,10 +294,11 @@ def _regex_rule_entries(df: DataFrame, rules: list[RegexRule]) -> list[tuple[Col
         if src not in df.columns:
             continue
         col = F.col(src).cast("string")
-        earlier_matched = F.lit(False)
-        for rule in ordered:
-            hit = col.isNotNull() & col.rlike(rule.when) & ~earlier_matched
-            earlier_matched = earlier_matched | (col.isNotNull() & col.rlike(rule.when))
+        first = F.lit(None).cast("int")
+        for i in reversed(range(len(ordered))):
+            first = F.when(col.rlike(ordered[i].when), F.lit(i)).otherwise(first)
+        df = df.withColumn(f"__rule_{src}", first)
+        for i, rule in enumerate(ordered):
             if rule.tag_key is None:
                 continue
             if rule.normalize:
@@ -287,71 +308,74 @@ def _regex_rule_entries(df: DataFrame, rules: list[RegexRule]) -> list[tuple[Col
                 if rule.titlecase:
                     value = F.initcap(value)
                 value = F.concat(F.lit(rule.prefix), value)
-            entries.append((F.lit(rule.tag_key), F.when(hit, value).otherwise(F.lit(None).cast("string"))))
-    return entries
+            entries.append((rule.tag_key, F.when(F.col(f"__rule_{src}") == i, value)))
+    return df, entries
 
 
-def _entries_to_tags(entries: list[tuple[Column, Column]]) -> Column:
-    """entries → map, dropping nulls and deduping keys (first non-null wins —
-    deterministic where the reference relied on dict insertion order)."""
-    pairs = F.array(*[F.struct(k.alias("key"), v.alias("value")) for k, v in entries])
-    arr = F.filter(pairs, lambda e: e["value"].isNotNull())
-    deduped = F.filter(
-        arr, lambda e, i: ~F.exists(F.slice(arr, 1, i), lambda p: p["key"] == e["key"])
-    )
-    return F.map_from_entries(deduped)
+def _with_tags(
+    df: DataFrame, keep: list[str], entries: list[tuple[str, Column]], tags_col: str = "tags"
+) -> DataFrame:
+    """``keep`` columns + a tag map built from (key, value) entries, dropping
+    null values; where a key repeats, its first non-null value wins
+    (deterministic where the reference relied on dict insertion order).
+
+    Each key's value is projected once into its own column and the map is
+    built from those columns, so no value is evaluated twice and the map
+    needs no lambda (Spark evaluates lambda bodies without generated code).
+    """
+    values: dict[str, list[Column]] = {}
+    for key, value in entries:
+        values.setdefault(key, []).append(value)
+    staged = df.select(*keep, *[F.coalesce(*vs).alias(f"__tag{i}") for i, vs in enumerate(values.values())])
+    empty = F.create_map().cast("map<string,string>")
+    maps = [
+        F.when(F.col(f"__tag{i}").isNotNull(), F.create_map(F.lit(key), F.col(f"__tag{i}"))).otherwise(empty)
+        for i, key in enumerate(values)
+    ]
+    return staged.select(*keep, F.map_concat(*maps).alias(tags_col))
 
 
 def convert(df: DataFrame, spec: ConverterSpec, keep_cols: list[str] | None = None) -> DataFrame:
-    """Compile the spec into one projection producing a ``tags`` map column.
+    """Compile the spec into projections producing a ``tags`` map column.
 
     Null-valued entries are dropped (the reference emits only present tags).
+    The normalized name, which the suffix rule reads three times, is
+    projected once first; the tag map is built by :func:`_with_tags`.
     Entirely whole-stage-codegen; the converter is a zero-shuffle stage.
     """
-    entries: list[tuple[Column, Column]] = []
+    entries: list[tuple[str, Column]] = []
     for src, tag_key in spec.renames.items():
         if src in df.columns:
-            entries.append((F.lit(tag_key), F.col(src).cast("string")))
+            entries.append((tag_key, F.col(src).cast("string")))
     for src, tag_key in spec.renames_title.items():
         if src in df.columns:
-            entries.append((F.lit(tag_key), F.initcap(F.col(src).cast("string"))))
+            entries.append((tag_key, F.initcap(F.col(src).cast("string"))))
     for src, tag_key in spec.renames_lower.items():
         if src in df.columns:
-            entries.append((F.lit(tag_key), F.lower(F.col(src).cast("string"))))
-    entries.extend(_regex_rule_entries(df, spec.regex_rules))
+            entries.append((tag_key, F.lower(F.col(src).cast("string"))))
+    df, rule_entries = _regex_rule_entries(df, spec.regex_rules)
+    entries.extend(rule_entries)
     for src, (tag_key, table) in spec.code_tables.items():
         if src in df.columns:
-            entries.append((F.lit(tag_key), _code_map_expr(F.col(src).cast("string"), table)))
+            entries.append((tag_key, _code_map_expr(F.col(src).cast("string"), table)))
     for key, value in spec.constants.items():
-        entries.append((F.lit(key), F.lit(value)))
+        entries.append((key, F.lit(value)))
     if spec.name_col and spec.name_col in df.columns:
-        name = TG.normalize_name(F.col(spec.name_col))
+        df = df.withColumn("__nn", TG.normalize_name(F.col(spec.name_col)))
+        name = F.col("__nn")
         if spec.name_suffix:
             # `trails.py:127-130`: append the suffix unless already present
             # as a word at position > 0 (python .find(" Trail") > 0)
             name = F.when(
                 F.instr(name, " " + spec.name_suffix) >= 2, name
             ).otherwise(F.concat(name, F.lit(" " + spec.name_suffix)))
-        entries.append((F.lit("name"), name))
+        entries.append(("name", name))
     if spec.ref_col and spec.ref_col in df.columns:
-        entries.append((F.lit("ref:usfs"), TG.normalize_ref(F.col(spec.ref_col), spec.ref_prefix)))
+        entries.append(("ref:usfs", TG.normalize_ref(F.col(spec.ref_col), spec.ref_prefix)))
     if spec.season_col and spec.season_col in df.columns:
-        entries.append((F.lit("opening_hours"), TG.opening_hours(F.col(spec.season_col))))
-        entries.append((F.lit("seasonal"), TG.is_seasonal(F.col(spec.season_col))))
+        entries.append(("opening_hours", TG.opening_hours(F.col(spec.season_col))))
+        entries.append(("seasonal", TG.is_seasonal(F.col(spec.season_col))))
     for src, tag_key in spec.vehicle_cols.items():
         if src in df.columns:
-            entries.append(
-                (
-                    F.lit(tag_key),
-                    F.when(F.upper(F.col(src).cast("string")) == "Y", F.lit("designated")).otherwise(
-                        F.lit(None).cast("string")
-                    ),
-                )
-            )
-
-    tags = _entries_to_tags(entries)
-    out_cols = keep_cols if keep_cols is not None else [c for c in ("geom", "ext_id", "way_id") if c in df.columns]
-    out = df.select(*out_cols, tags.alias("tags"))
-    for req in spec.require_tags:
-        out = out.filter(F.map_contains_key("tags", F.lit(req)))
-    return out
+            entries.append((tag_key, F.when(F.upper(F.col(src).cast("string")) == "Y", F.lit("designated"))))
+    return _with_tags(df, _out_cols(df, keep_cols), entries)

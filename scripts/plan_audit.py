@@ -11,6 +11,10 @@ sf0.001 and assert the 100 TB anti-pattern contract on each formatted plan:
   collapse and could OOM a default-1g driver JVM during optimization
   (fixed 2026-08-19; see operators/similarity.py docstrings).
 
+Each line also shows, as information only, the most repeated heavy calls
+in the query's optimized plan (:func:`heavy_calls`): a heavy expression
+copied into many consumers is evaluated once per copy.
+
 Usage: python scripts/plan_audit.py  →  exit 0 clean / 1 with findings.
 tests/test_plan_audit.py pins the high-risk subset on every pytest run;
 this script is the full-registry sweep.
@@ -18,7 +22,9 @@ this script is the full-registry sweep.
 
 from __future__ import annotations
 
+import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, "/root/repo")
 
@@ -48,6 +54,31 @@ def plan_of(df) -> str:
     )
 
 
+# Calls whose per-row cost dominates an expression, as the optimized plan
+# prints them: regexes (each a scan of the string), the mercator tile math,
+# per-pair set intersections, and lambdas (evaluated without generated code
+# or shared subexpressions).
+HEAVY_CALLS = (
+    "regexp_replace(",
+    "regexp_extract(",
+    "RLIKE(",
+    "ASINH(",
+    "TAN(",
+    "array_intersect(",
+    "lambdafunction(",
+)
+
+
+def heavy_calls(df) -> Counter:
+    """How often each heavy call appears in ``df``'s optimized logical plan
+    (calls that do not appear are left out).  A count above the number of
+    distinct heavy expressions the query needs means some expression was
+    copied, by the author or by the optimizer, into several consumers."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    counts = {c: len(re.findall(r"(?<!\w)" + re.escape(c), plan)) for c in HEAVY_CALLS}
+    return Counter({c: k for c, k in counts.items() if k})
+
+
 def audit(names: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
@@ -68,7 +99,9 @@ def audit(names: list[str] | None = None) -> int:
     findings: list[str] = []
     for name in selected:
         try:
-            plan = plan_of(qs[name](spark, SF))
+            df = qs[name](spark, SF)
+            plan = plan_of(df)
+            heavy = heavy_calls(df)
         except Exception as e:  # a query that cannot even plan is a finding
             findings.append(f"{name}: failed to build plan: {str(e)[:200]}")
             print(f"BAD  {name}: failed to build plan", flush=True)
@@ -87,7 +120,8 @@ def audit(names: list[str] | None = None) -> int:
                 "(expression-tree bomb — see similarity.with_ivf_cells history)"
             )
         findings.extend(mine)
-        print(f"{'BAD ' if mine else 'ok  '} {name}: {len(plan)} chars", flush=True)
+        top = " ".join(f"{c}x{k}" for c, k in heavy.most_common(3))
+        print(f"{'BAD ' if mine else 'ok  '} {name}: {len(plan)} chars  {top}".rstrip(), flush=True)
     print()
     if findings:
         print("FINDINGS:")

@@ -112,3 +112,22 @@ def test_clip_rects_convex_against_known_areas():
     assert abs(areas(0) - 0.04) < 1e-12          # fully inside: 0.2 x 0.2
     assert abs(areas(1) - 0.25) < 1e-12          # clipped to [0.5,1]^2
     assert abs(areas(3) - 0.125) < 1e-12         # clipped to x in [0, .25]
+
+
+def test_cell_id_col_matches_numpy_kernel(spark):
+    """The Column cell id (partition columns, the salt pre-pass proxy) is
+    bit-identical to the numpy kernel, edges included."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rng = np.random.RandomState(7)
+    lon = np.concatenate([rng.uniform(-180, 180, 400), [-180.0, 180.0, 0.0, 179.9999999, -179.9999999]])
+    lat = np.concatenate([rng.uniform(-85.2, 85.2, 400), [85.05112878, -85.05112878, 0.0, 89.9, -89.9]])
+    pdf = pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat})
+    df = spark.createDataFrame(pdf)
+    for z in (1, 4, 8, 9, 16, 17, 18, 24):
+        got = (
+            df.select("i", grid.cell_id_col(F.col("lon"), F.col("lat"), z).alias("c"))
+            .toPandas().sort_values("i")["c"].to_numpy()
+        )
+        assert np.array_equal(got, grid.cell_id(lon, lat, z)), z

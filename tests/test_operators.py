@@ -49,6 +49,57 @@ def test_knn_join_matches_bruteforce(spark):
     assert np.allclose(merged["dist_e"], merged["dist_g"], atol=1e-6)
 
 
+def test_knn_join_matches_bruteforce_at_edges(spark):
+    """Clusters of points 0-10 m apart on tile borders at the 7 m
+    tolerance's zoom, across the antimeridian (lon = 180.0 exactly, whose
+    tile column clamps to the last one), and at lat ±85.05, where a tile
+    edge is ~1.7 m and the tolerance spans several tiles."""
+    from osm_merge_spark import geometry as G
+    from osm_merge_spark import grid
+
+    z = P.zoom_for_tolerance(7.0)
+    n = 1 << z
+    assert grid.lonlat_to_tile(np.array([180.0]), np.array([0.0]), z)[0][0] == n - 1
+    x_edge = np.floor((-105.0 + 180.0) / 360.0 * n) / n * 360.0 - 180.0
+    y = np.floor((1.0 - np.arcsinh(np.tan(np.radians(39.0))) / np.pi) / 2.0 * n)
+    y_edge = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * y / n))))
+    centers = [(x_edge, 39.0), (-104.9, y_edge), (x_edge, y_edge), (180.0, 0.0), (-180.0, 0.0),
+               (180.0, 45.0), (0.0, 85.05), (0.0, -85.05), (120.0, 85.05112878), (120.0, -85.05112878)]
+    rng = np.random.RandomState(5)
+    lon, lat = [], []
+    for c_lon, c_lat in centers:  # the center itself, then 12 points around it
+        lon.append(np.r_[c_lon, c_lon + rng.uniform(-10, 10, 12) / (111_320.0 * np.cos(np.radians(c_lat)))])
+        lat.append(np.r_[c_lat, c_lat + rng.uniform(-10, 10, 12) / 110_540.0])
+    lon, lat = np.concatenate(lon), np.clip(np.concatenate(lat), -85.05112878, 85.05112878)
+    lon = np.where(lon > 180.0, lon - 360.0, np.where(lon < -180.0, lon + 360.0, lon))
+    # probes: even points; targets: odd points plus every center
+    t_idx = np.sort(np.r_[np.arange(1, len(lon), 2), np.arange(0, len(lon), 13)])
+    # plus a probe at lon = 180.0 whose only match is the same place written
+    # as lon = -180.0
+    probes = pd.DataFrame({"poi_id": np.r_[np.arange(0, len(lon), 2), -1],
+                           "lon": np.r_[lon[::2], 180.0], "lat": np.r_[lat[::2], 10.0]})
+    targets = pd.DataFrame({"osm_id": np.r_[np.arange(len(t_idx)) + 10_000, 1],
+                            "lon": np.r_[lon[t_idx], -180.0], "lat": np.r_[lat[t_idx], 10.0]})
+    tol = 7.0
+    got = (
+        P.knn_join(spark.createDataFrame(probes), spark.createDataFrame(targets), tolerance_m=tol, k=1)
+        .select("poi_id", "osm_id", "dist")
+        .toPandas()
+    )
+    d = G.haversine_m(
+        probes["lon"].values[:, None], probes["lat"].values[:, None],
+        targets["lon"].values[None, :], targets["lat"].values[None, :],
+    )
+    exp = pd.DataFrame({"poi_id": probes["poi_id"], "osm_id": targets["osm_id"].values[d.argmin(axis=1)],
+                        "dist": d.min(axis=1)})
+    exp = exp[exp["dist"] <= tol]
+    assert len(exp) > len(probes) // 2
+    merged = exp.merge(got, on="poi_id", suffixes=("_e", "_g"), how="outer", indicator=True)
+    assert (merged["_merge"] == "both").all(), merged[merged["_merge"] != "both"]
+    assert (merged["osm_id_e"] == merged["osm_id_g"]).all()
+    assert np.allclose(merged["dist_e"], merged["dist_g"], atol=1e-6)
+
+
 def test_point_tile_assignment(spark):
     pts = spark.createDataFrame(
         pd.DataFrame({"pid": [0, 1, 2], "lon": [-105.0, -104.99, -120.0], "lat": [39.0, 39.05, 39.0]})

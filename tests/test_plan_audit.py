@@ -72,3 +72,67 @@ def test_plan_size_capped(plans):
         "default-heap driver; keep argmin/top-n selections in single array "
         "expressions)"
     )
+
+
+def test_heavy_calls_counts_optimized_plan(spark):
+    from pyspark.sql import functions as F
+
+    from scripts.plan_audit import heavy_calls
+
+    df = spark.range(3).select(F.col("id").cast("string").alias("s"))
+    twice = df.select(F.regexp_replace("s", "1", "x").alias("r")).filter(F.col("r") != "x")
+    # the filter is pushed below the projection with the call inlined
+    assert heavy_calls(twice)["regexp_replace("] == 2
+    lam = df.select(F.filter(F.array("s"), lambda c: c.isNotNull()).alias("a"))
+    assert heavy_calls(lam) == {"lambdafunction(": 1}
+    # ATAN is not TAN
+    assert heavy_calls(spark.range(1).select(F.atan("id"))) == {}
+
+
+def test_knn_tile_math_once_and_no_lambda(spark):
+    from pyspark.sql import functions as F
+
+    from osm_merge_spark.operators import poi as P
+    from scripts.plan_audit import heavy_calls
+
+    pts = spark.range(10).select(F.col("id").alias("poi_id"), F.lit(-105.0).alias("lon"), F.lit(39.0).alias("lat"))
+    tgt = pts.withColumnRenamed("poi_id", "osm_id")
+    heavy = heavy_calls(P.knn_join(pts, tgt, tolerance_m=7.0, k=1))
+    # one mercator y per side; the ring reads projected helper columns
+    assert heavy["ASINH("] <= 2 and heavy["TAN("] <= 2
+    assert heavy["lambdafunction("] == 0
+
+
+def test_local_roads_normalizes_each_name_once(spark):
+    from osm_merge_spark.functions import tags as TG
+    from osm_merge_spark.sources import converters as CV
+    from scripts.plan_audit import heavy_calls
+
+    src = spark.createDataFrame([(1, 15, "Fs 428-cedar ridge")], "gid int, rd_num int, road_name string")
+    name_only = heavy_calls(src.select(TG.normalize_name("road_name").alias("nn")))["regexp_replace("]
+    heavy = heavy_calls(CV.local_roads_convert(src, keep_cols=["gid"]))
+    assert name_only == 15
+    # one normalization plus the two County/Forest Road ref rewrites
+    assert heavy["regexp_replace("] <= name_only + 2
+    assert heavy["lambdafunction("] == 0
+
+
+def test_ngram_jaccard_intersects_once_per_pair(spark, monkeypatch):
+    """The per-pair intersect is projected once, not re-inlined into the
+    join condition and the output (the plan is read before the query's
+    materialization barrier)."""
+    import __spark_entry__ as entry
+    from scripts.plan_audit import heavy_calls
+
+    frames = []
+
+    def capture(df, *args, **kwargs):
+        frames.append(df)
+        return df
+
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", capture)
+    qs = entry.queries()
+    for name in ("q_ngram_jaccard", "q_ngram_jaccard_gated"):
+        frames.clear()
+        qs[name](spark, SF)
+        assert heavy_calls(frames[-1])["array_intersect("] == 1, name

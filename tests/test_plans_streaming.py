@@ -238,3 +238,16 @@ def test_interval_join_streams_bounds(spark):
         .toPandas()
     )
     assert list(zip(got["p_id"], got["click_id"])) == [(1, 100), (1, 101), (2, 103)]
+
+
+def test_completed_buckets_missing_path_reads_nothing(spark, tmpdir):
+    sc = spark.sparkContext
+    sc.setJobGroup("completed-buckets-missing", "fresh run")
+    try:
+        assert L.completed_buckets(spark, tmpdir + "/absent/_lineage", "r1") == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("completed-buckets-missing")) == []
+    L.append_lineage(spark, tmpdir + "/_lineage", "r1", 3, 10, 10, 1)
+    assert L.completed_buckets(spark, tmpdir + "/_lineage", "r1") == {3}
+    assert L.completed_buckets(spark, tmpdir + "/_lineage", "r2") == set()
