@@ -159,33 +159,36 @@ def fuzzy_ratio(a: Column, b: Column) -> Column:
 # Opening hours: "MM/DD-MM/DD" → "Mon-Mon" (P9)
 # ---------------------------------------------------------------------------
 
-_MONTHS = ["", "Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
+_MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
+_DATE_RANGE_RE = r"^(\d{1,2})/\d{1,2}-(\d{1,2})/\d{1,2}$"
+
+
+def _months(date_range: Column | str) -> tuple[Column, Column]:
+    """The two month numbers of "MM/DD-MM/DD" (0-99; null if malformed)."""
+    d = F.col(date_range) if isinstance(date_range, str) else date_range
+    return tuple(F.regexp_extract(d, _DATE_RANGE_RE, g).try_cast("int") for g in (1, 2))
 
 
 def _month_name(mm: Column) -> Column:
-    expr = F.lit(None).cast("string")
-    for i in range(1, 13):
-        expr = F.when(mm == i, F.lit(_MONTHS[i])).otherwise(expr)
-    return expr
+    """Month number → "Jan".."Dec", null outside 1-12: one lookup in an
+    array literal whose slot 1 is null, so index ``mm + 1`` is never the
+    0 that ``try_element_at`` rejects and 13+ runs off the end."""
+    names = F.array(F.lit(None).cast("string"), *[F.lit(m) for m in _MONTHS])
+    return F.try_element_at(names, mm + 1)
 
 
 def opening_hours(date_range: Column | str) -> Column:
     """`"05/15-11/30"` → `"May-Nov"`; `"01/01-12/31"` → `"Jan-Dec"` (the
     reference additionally marks the full-year case ``seasonal=no``,
-    `mvum.py:99-103` — callers derive that from the output)."""
-    d = F.col(date_range) if isinstance(date_range, str) else date_range
-    m1 = F.regexp_extract(d, r"^(\d{1,2})/\d{1,2}-(\d{1,2})/\d{1,2}$", 1).try_cast("int")
-    m2 = F.regexp_extract(d, r"^(\d{1,2})/\d{1,2}-(\d{1,2})/\d{1,2}$", 2).try_cast("int")
-    return F.when(
-        m1.isNotNull() & m2.isNotNull() & (m1 >= 1) & (m1 <= 12) & (m2 >= 1) & (m2 <= 12),
-        F.concat(_month_name(m1), F.lit("-"), _month_name(m2)),
-    ).otherwise(F.lit(None).cast("string"))
+    `mvum.py:99-103` — see :func:`is_seasonal`).  Null unless both months
+    are 1-12."""
+    m1, m2 = _months(date_range)
+    return F.concat(_month_name(m1), F.lit("-"), _month_name(m2))
 
 
 def is_seasonal(date_range: Column | str) -> Column:
-    """seasonal=yes unless the range covers the whole year (`mvum.py:99-103`)."""
-    d = F.col(date_range) if isinstance(date_range, str) else date_range
-    oh = opening_hours(d)
-    return F.when(oh.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(oh == "Jan-Dec", F.lit("no")).otherwise(F.lit("yes"))
-    )
+    """seasonal=yes unless the range covers the whole year, January to
+    December (`mvum.py:99-103`); null where :func:`opening_hours` is."""
+    m1, m2 = _months(date_range)
+    full_year = (m1 == 1) & (m2 == 12)
+    return F.when(opening_hours(date_range).isNotNull(), F.when(full_year, F.lit("no")).otherwise(F.lit("yes")))

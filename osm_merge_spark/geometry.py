@@ -15,8 +15,9 @@ gets from shapely/pyproj is re-derived here as batch numpy over Arrow data:
 Batch layout: ragged geometry batches travel as ``(flat_xy, offsets)`` —
 ``flat_xy`` is an (N, 2) float64 array of every vertex of every row
 concatenated, ``offsets`` an (n+1,) int64 of row boundaries.  This maps 1:1 to
-Arrow ``list<double>`` buffers, so pandas-UDF wrappers are zero-copy-ish and
-never loop per row.
+Arrow ``list<double>`` buffers: :func:`ragged_from_arrow` and
+:func:`arrow_from_ragged` are the one codec every Spark-facing kernel uses,
+zero-copy on the way in and never looping per row.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # geometry kind codes (engine-wide)
 KIND_POINT = 1
@@ -107,20 +110,26 @@ def format_wkt(kinds: np.ndarray, offsets: np.ndarray, flat_xy: np.ndarray, ndig
     return out
 
 
-def ragged_from_arrays(arrays: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """pandas Series of per-row float sequences [x0,y0,x1,y1,...] → (flat_xy, offsets)."""
-    lens = np.array([0 if a is None else len(a) for a in arrays], dtype=np.int64) // 2
-    offsets = np.zeros(len(arrays) + 1, dtype=np.int64)
+def ragged_from_arrow(geoms: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow ``list<double>`` rows [x0,y0,x1,y1,...] → (flat_xy, offsets).
+
+    Zero-copy over the list's value buffer.  Null rows come out zero-length;
+    a sliced array is read from its own window (``flatten`` honours the slice
+    offset and skips the values behind null rows)."""
+    lens = pc.list_value_length(geoms).fill_null(0).to_numpy() // 2
+    offsets = np.zeros(len(geoms) + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
-    if offsets[-1] == 0:
-        return np.empty((0, 2)), offsets
-    flat = np.concatenate([np.asarray(a, dtype=np.float64) for a in arrays if a is not None and len(a)])
-    return flat.reshape(-1, 2), offsets
+    flat = geoms.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(-1, 2), offsets
 
 
-def arrays_from_ragged(offsets: np.ndarray, flat_xy: np.ndarray) -> list[np.ndarray]:
-    flat = flat_xy.reshape(-1)
-    return [flat[2 * offsets[i] : 2 * offsets[i + 1]] for i in range(len(offsets) - 1)]
+def arrow_from_ragged(offsets: np.ndarray, flat_xy: np.ndarray) -> pa.ListArray:
+    """Inverse of :func:`ragged_from_arrow`: one ``list<double>`` row per
+    geometry, empty (not null) for zero-length rows."""
+    return pa.ListArray.from_arrays(
+        pa.array(2 * np.asarray(offsets), type=pa.int32()),
+        pa.array(np.ascontiguousarray(flat_xy, dtype=np.float64).reshape(-1)),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -13,8 +13,9 @@ where ``x, y`` are the web-mercator tile indices at zoom ``z`` (x interleaved in
 even bits, y in odd bits).  Properties the engine relies on:
 
 - **equi-join key manufacture**: two geometries within ``d`` meters share a cell
-  or adjacent cells at zoom ``z`` when the k-ring radius covers ``d`` — this
-  turns the reference's brute-force distance theta-join
+  at any zoom once one side's cover is padded by ``d`` at cell borders
+  (:func:`cover_polyline`'s border-epsilon ``pad_m``) — this turns the
+  reference's brute-force distance theta-join
   (`osm_merge/conflator.py:140-224`) into a Spark hash join;
 - **hierarchy**: ``parent(cell, dz)`` is a shift — coarse parents are partition
   columns, enabling partition pruning for AOI clipping
@@ -25,7 +26,7 @@ even bits, y in odd bits).  Properties the engine relies on:
 
 Default zoom 18 ≈ 153 m ground size at the equator — comparable to H3 res 9
 (~174 m edge) named by BASELINE.json.  All functions are numpy-vectorized and
-exposed to Spark via Arrow-batched pandas UDFs in ``operators``.
+reach Spark through Arrow batch functions in ``operators``.
 """
 
 from __future__ import annotations
@@ -155,59 +156,6 @@ def parent_cell(cell: np.ndarray, parent_z: int) -> np.ndarray:
 def cell_size_m(z: int, lat: float = 0.0) -> float:
     """Ground size of a zoom-z tile edge at latitude ``lat`` (meters)."""
     return EARTH_CIRCUMFERENCE_M * float(np.cos(np.radians(lat))) / (1 << z)
-
-
-def ring_for_threshold(threshold_m: float, z: int, max_abs_lat: float) -> int:
-    """k-ring radius so that any two points within threshold_m share a ring.
-
-    Derived, not hard-coded (SURVEY.md §7.3 risk 4): worst-case (smallest)
-    ground tile size over the data's latitude range bounds the ring.
-    """
-    size = cell_size_m(z, max_abs_lat)
-    return max(1, int(np.ceil(threshold_m / size)))
-
-
-def k_ring(cells: np.ndarray, k: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance k of each input cell.
-
-    Returns shape (n, (2k+1)^2). x wraps at the antimeridian; y clamps at the
-    poles (duplicate ids possible at the clamp — callers dedupe via join).
-    """
-    z, x, y = cell_zxy(np.asarray(cells, dtype=np.int64))
-    n = (np.int64(1) << z.astype(np.int64))
-    offs = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(offs, offs, indexing="ij")
-    dx = dx.ravel()[None, :]
-    dy = dy.ravel()[None, :]
-    nx = (x[:, None] + dx) % n[:, None]
-    ny = np.clip(y[:, None] + dy, 0, n[:, None] - 1)
-    zz = np.broadcast_to(z[:, None], nx.shape)
-    return cell_from_zxy(zz, nx, ny)
-
-
-def cover_bbox(
-    min_lon: np.ndarray,
-    min_lat: np.ndarray,
-    max_lon: np.ndarray,
-    max_lat: np.ndarray,
-    z: int = DEFAULT_ZOOM,
-    cap: int = 4096,
-) -> list[np.ndarray]:
-    """Cells covering each bbox (list of per-row arrays; cap guards runaways)."""
-    x0, y1 = lonlat_to_tile(min_lon, min_lat, z)  # note: y grows southward
-    x1, y0 = lonlat_to_tile(max_lon, max_lat, z)
-    out: list[np.ndarray] = []
-    for i in range(len(x0)):
-        xs = np.arange(x0[i], x1[i] + 1, dtype=np.int64)
-        ys = np.arange(y0[i], y1[i] + 1, dtype=np.int64)
-        if len(xs) * len(ys) > cap:
-            # coarse fallback: single parent-level cover marker
-            xs = xs[:: max(1, len(xs) // 64)]
-            ys = ys[:: max(1, len(ys) // 64)]
-        gx, gy = np.meshgrid(xs, ys, indexing="ij")
-        zz = np.full(gx.size, z, dtype=np.int64)
-        out.append(np.unique(cell_from_zxy(zz, gx.ravel(), gy.ravel())))
-    return out
 
 
 def cover_polyline(

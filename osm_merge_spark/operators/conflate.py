@@ -9,17 +9,18 @@ Reference semantics being reproduced (SURVEY.md §2.3/§2.4):
 - J3 length-mismatch sentinel       `osm_merge/conflator.py:608-630`
 - J4 slope/angle predicate          `osm_merge/conflator.py:471-563`
 - A2-A4 hits scoring + best match   `osm_merge/conflator.py:670-792,373-419`
-- A3 candidate cap 7                `osm_merge/conflator.py:349-354`
+  (the A3 candidate cap 7, `conflator.py:349-354`, cannot change the pick —
+  see :func:`best_matches`)
 - J7 anti-join (new features)       `osm_merge/conflator.py:425-434`
 
 Scale design (the part the reference lacks):
 
-- cell cover is computed in one Arrow-batched pandas UDF per side — the cover
-  explode manufactures an equi-join key, so Catalyst plans a shuffled hash
-  join instead of the reference's O(N·M) loop;
-- the ring expansion needed for cross-cell near matches is applied to ONE
-  side only (the smaller, by default primary) and the ring radius is derived
-  from the threshold + zoom + latitude band (grid.ring_for_threshold);
+- cell cover is computed in one ``mapInArrow`` batch pass per side that
+  emits one row per (feature, cell) — the manufactured equi-join key, so
+  Catalyst plans a shuffled hash join instead of the reference's O(N·M) loop;
+- cross-cell near matches come from the border-epsilon cover on ONE side
+  only (the primary): a neighbor cell is added only where the geometry runs
+  within the threshold of a cell border (``grid.cover_polyline(pad_m=…)``);
 - hot cells are handled twice over: AQE skew-join splitting is enabled in the
   session, and an optional explicit salt (frequency pre-pass → per-cell salt
   factor inlined as a literal map lookup, ``plans/skew.py:hot_factor``)
@@ -27,7 +28,12 @@ Scale design (the part the reference lacks):
 - candidate pairs are deduped with a groupBy on (ext_id, way_id) *before* the
   expensive exact kernels run, so each pair is scored once;
 - everything after the join is whole-stage-codegen Column math except the
-  geometry kernel itself (one pandas UDF over Arrow batches).
+  geometry kernel itself (one ``mapInArrow`` pass over the pair batches).
+
+The Python boundary is ``plans.stage.with_batch_columns`` over the
+``geometry.ragged_from_arrow`` codec: each kernel reads the Arrow buffers of a
+record batch zero-copy and is evaluated once per row by construction: no
+filter pushed past it can make Catalyst run it twice.
 
 The candidate order the reference leaves implementation-defined (SURVEY.md
 §7.3 risk 1) is pinned here: (hits DESC, dist ASC, way_id ASC).
@@ -36,7 +42,7 @@ The candidate order the reference leaves implementation-defined (SURVEY.md
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,14 +50,13 @@ from pyspark.sql import types as T
 from .. import geometry as G
 from .. import grid
 from ..functions import tags as TG
-from ..plans import skew
+from ..plans import skew, stage
 
 # reference defaults (`conflator.py:94,201-203,1081`; `conflatePOI.py:73`)
 DEFAULT_THRESHOLD_M = 7.0
 ANGLE_THRESHOLD_DEG = 17.0
 SLOPE_THRESHOLD = 4.0
 MATCH_RATIO = 80.0
-CANDIDATE_CAP = 7
 LENGTH_MISMATCH_M = 1000.0
 
 # Candidate-join zoom (r6, guide §2.3 "shuffle fewer bytes"/§1.2 "the
@@ -80,81 +85,31 @@ DEFAULT_CONFLATE_ZOOM = 16
 
 
 # ---------------------------------------------------------------------------
-# Cell cover / ring expansion UDFs
+# Cell cover and pair scoring: the only Python in the pipeline
 # ---------------------------------------------------------------------------
 
-
-_COVER_SCHEMA = T.StructType(
-    [
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("bbox", T.ArrayType(T.DoubleType())),  # [min_lon,min_lat,max_lon,max_lat]
-    ]
-)
-
-
-def cover_udf(zoom: int, pad_m: float = 0.0):
-    """pandas UDF: geom array<double> → (covering cells, bbox) in one
-    vectorized pass per Arrow batch.  ``pad_m`` applies the border-epsilon
-    expansion (neighbor cells only where the geometry runs within pad_m of a
-    tile border) — ~1.1-1.3x cells versus 9x for a blanket k-ring.  The bbox
-    rides along to power the JVM-side pair prefilter."""
-
-    @F.pandas_udf(_COVER_SCHEMA)
-    def _cover(geoms: pd.Series) -> pd.DataFrame:
-        flat, offsets = G.ragged_from_arrays(geoms)
-        cells, rows = grid.cover_polyline(flat, offsets, zoom, pad_m=pad_m)
-        order = np.lexsort((cells, rows))
-        rows, cells = rows[order], cells[order]
-        if len(rows):
-            first = np.ones(len(rows), dtype=bool)
-            first[1:] = (rows[1:] != rows[:-1]) | (cells[1:] != cells[:-1])
-            rows, cells = rows[first], cells[first]
-        out = [[] for _ in range(len(geoms))]
-        for r, chunk in zip(*_split_runs(rows, cells)):
-            out[r] = chunk
-        bb = G.bbox_per_row(offsets, flat)
-        return pd.DataFrame({"cells": out, "bbox": list(bb)})
-
-    # deterministic in fact — marked nondeterministic so Catalyst materializes
-    # the UDF once instead of re-evaluating it per referencing expression
-    # (stacked ArrowEvalPython nodes double Python time otherwise)
-    return _cover.asNondeterministic()
-
-
-def _split_runs(rows: np.ndarray, cells: np.ndarray):
-    """Group sorted (row, cell) pairs back into per-row chunks."""
-    if len(rows) == 0:
-        return [], []
-    bounds = np.nonzero(np.diff(rows))[0] + 1
-    chunks = np.split(cells, bounds)
-    uniq = np.concatenate(([rows[0]], rows[bounds]))
-    return uniq.tolist(), chunks
+BBOX_COLS = ("min_lon", "min_lat", "max_lon", "max_lat")
 
 
 def with_cells(
-    df: DataFrame, geom_col: str = "geom", zoom: int = grid.DEFAULT_ZOOM, pad_m: float = 0.0,
-    keep_bbox: bool = False,
+    df: DataFrame, geom_col: str = "geom", zoom: int = grid.DEFAULT_ZOOM, pad_m: float = 0.0
 ) -> DataFrame:
-    """Explode df to one row per covering cell (the join-key manufacture)."""
-    out = df.withColumn("__cov", cover_udf(zoom, pad_m)(F.col(geom_col)))
-    cols = ["*", F.explode("__cov.cells").alias("cell")]
-    out = out.select(*cols)
-    if keep_bbox:
-        out = out.withColumn("bbox", F.col("__cov.bbox"))
-    return out.drop("__cov")
+    """Explode df to one row per covering cell (the join-key manufacture):
+    df's columns + ``cell`` + the feature's bbox (``BBOX_COLS``), which
+    powers the JVM-side pair prefilter.  ``pad_m`` applies the border-epsilon
+    expansion (neighbor cells only where the geometry runs within pad_m of a
+    tile border) — ~1.1-1.3x cells versus 9x for a blanket k-ring.  Rows with
+    an empty or null geometry cover no cell and drop out."""
 
+    def cover(batch: pa.RecordBatch):
+        flat, offsets = G.ragged_from_arrow(batch.column(geom_col))
+        # sorted, unique (row, cell) pairs: the exploded rows in input order
+        cells, rows = grid.cover_polyline(flat, offsets, zoom, pad_m=pad_m)
+        bb = G.bbox_per_row(offsets, flat)[rows]
+        return rows, [cells, *bb.T]
 
-# ---------------------------------------------------------------------------
-# Pair scoring kernel (the only Python in the pipeline, Arrow-batched)
-# ---------------------------------------------------------------------------
-
-_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("dist", T.DoubleType()),
-        T.StructField("dslope", T.DoubleType()),
-        T.StructField("angle", T.DoubleType()),
-    ]
-)
+    fields = [T.StructField("cell", T.LongType())] + [T.StructField(c, T.DoubleType()) for c in BBOX_COLS]
+    return stage.with_batch_columns(df, fields, cover)
 
 
 # padded-kernel budget: Pa·Pb per pair beyond this routes to the ragged
@@ -163,19 +118,18 @@ _SCORE_SCHEMA = T.StructType(
 _PADDED_WORK_CAP = 4096
 
 
-@F.pandas_udf(_SCORE_SCHEMA)
-def geom_score_udf(geom_a: pd.Series, geom_b: pd.Series) -> pd.DataFrame:
-    """Fused J2+J3+J4: min distance (with the length-mismatch −1.0 sentinel)
-    + endpoint slope/angle, vectorized over the whole Arrow batch.
+def geom_scores(geom_a: pa.Array, geom_b: pa.Array) -> list[np.ndarray]:
+    """Fused J2+J3+J4 over one batch of pairs: [dist, dslope, angle] — min
+    distance (with the length-mismatch −1.0 sentinel) + endpoint
+    slope/angle.
 
     Short-geometry batches (the common case after P10 simplification) use
     the padded all-pairs kernel; batches containing long polylines use the
     exact ragged cross-product kernel with bounded memory."""
-    flat_a, off_a = G.ragged_from_arrays(geom_a)
-    flat_b, off_b = G.ragged_from_arrays(geom_b)
-    pa = int(np.diff(off_a).max()) if len(off_a) > 1 else 0
-    pb = int(np.diff(off_b).max()) if len(off_b) > 1 else 0
-    if pa * pb <= _PADDED_WORK_CAP:
+    flat_a, off_a = G.ragged_from_arrow(geom_a)
+    flat_b, off_b = G.ragged_from_arrow(geom_b)
+    wa, wb = int(np.diff(off_a).max()), int(np.diff(off_b).max())
+    if wa * wb <= _PADDED_WORK_CAP:
         A = G.pad_ragged(off_a, flat_a)
         B = G.pad_ragged(off_b, flat_b)
         dist = G.min_dist_pair_m(A, B)
@@ -202,11 +156,16 @@ def geom_score_udf(geom_a: pd.Series, geom_b: pd.Series) -> pd.DataFrame:
         # a = primary/new (external), b = secondary/old (OSM): hull from OLD
         contact = G.hull_contact(off_a, flat_a, off_b, flat_b, idx)
         dist[idx] = np.where(contact, 0.0, -1.0)
-    return pd.DataFrame({"dist": dist, "dslope": dslope, "angle": angle})
+    return [dist, dslope, angle]
 
 
-# single evaluation (see cover_udf note)
-geom_score_udf = geom_score_udf.asNondeterministic()
+def with_geom_scores(pairs: DataFrame) -> DataFrame:
+    """pairs + (dist, dslope, angle) from :func:`geom_scores` over the
+    ``geom_p`` (new) and ``geom_s`` (old) columns, one ``mapInArrow`` pass."""
+    fields = [T.StructField(c, T.DoubleType()) for c in ("dist", "dslope", "angle")]
+    return stage.with_batch_columns(
+        pairs, fields, lambda batch: (None, geom_scores(batch.column("geom_p"), batch.column("geom_s")))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -219,12 +178,11 @@ def candidate_pairs(
     secondary: DataFrame,
     threshold_m: float = DEFAULT_THRESHOLD_M,
     zoom: int = DEFAULT_CONFLATE_ZOOM,
-    max_abs_lat: float = 60.0,
     salt_hot_threshold: int | None = None,
 ) -> DataFrame:
     """Cell-join candidate generation.
 
-    primary:  (ext_id, geom, ...)   — ring-expanded side
+    primary:  (ext_id, geom, ...)   — border-epsilon padded side
     secondary:(way_id, geom, ...)   — covered side
     Returns distinct (ext_id, way_id) candidate pairs with the columns the
     exact refine needs: both geoms plus the pre-normalized name/ref columns.
@@ -252,11 +210,11 @@ def candidate_pairs(
         TG.ref_number(F.element_at("tags", F.lit("ref:usfs"))).alias("ref_num_s"),
     )
     # border-epsilon pad on the primary side replaces the 9x k-ring explode
-    p = with_cells(primary.select("ext_id", "geom"), "geom", zoom, pad_m=threshold_m, keep_bbox=True).select(
-        "ext_id", "cell", F.col("bbox").alias("bbox_p")
+    p = with_cells(primary.select("ext_id", "geom"), "geom", zoom, pad_m=threshold_m).select(
+        "ext_id", "cell", *[F.col(c).alias(c + "_p") for c in BBOX_COLS]
     )
-    s = with_cells(secondary.select("way_id", "geom"), "geom", zoom, pad_m=0.0, keep_bbox=True).select(
-        "way_id", "cell", F.col("bbox").alias("bbox_s")
+    s = with_cells(secondary.select("way_id", "geom"), "geom", zoom, pad_m=0.0).select(
+        "way_id", "cell", *[F.col(c).alias(c + "_s") for c in BBOX_COLS]
     )
 
     # Replicate-small salt (r6): cells of the secondary side above
@@ -288,19 +246,12 @@ def candidate_pairs(
     # threshold can never match — they are dropped before the expensive
     # kernel (and before the dedupe shuffle).
     lon_gap = F.greatest(
-        F.greatest(F.element_at("bbox_p", 1), F.element_at("bbox_s", 1))
-        - F.least(F.element_at("bbox_p", 3), F.element_at("bbox_s", 3)),
-        F.lit(0.0),
+        F.greatest("min_lon_p", "min_lon_s") - F.least("max_lon_p", "max_lon_s"), F.lit(0.0)
     )
     lat_gap = F.greatest(
-        F.greatest(F.element_at("bbox_p", 2), F.element_at("bbox_s", 2))
-        - F.least(F.element_at("bbox_p", 4), F.element_at("bbox_s", 4)),
-        F.lit(0.0),
+        F.greatest("min_lat_p", "min_lat_s") - F.least("max_lat_p", "max_lat_s"), F.lit(0.0)
     )
-    max_abs = F.greatest(
-        F.abs(F.element_at("bbox_p", 2)), F.abs(F.element_at("bbox_p", 4)),
-        F.abs(F.element_at("bbox_s", 2)), F.abs(F.element_at("bbox_s", 4)),
-    )
+    max_abs = F.greatest(*[F.abs(c) for c in ("min_lat_p", "max_lat_p", "min_lat_s", "max_lat_s")])
     # cos at the pair's max |lat| under-estimates lon meters → conservative
     gap_m = F.sqrt(
         F.pow(lon_gap * 111_320.0 * F.cos(F.radians(max_abs)), 2) + F.pow(lat_gap * 110_540.0, 2)
@@ -334,9 +285,7 @@ def score_pairs(pairs: DataFrame, threshold_m: float = DEFAULT_THRESHOLD_M) -> D
     hits = (dist <= threshold) + (name fuzzy ≥ 80) + (ref numbers equal)
     with slope/angle rejection for non-matching directions.
     """
-    scored = pairs.withColumn("g", geom_score_udf("geom_p", "geom_s")).select(
-        "*", F.col("g.dist").alias("dist"), F.col("g.dslope").alias("dslope"), F.col("g.angle").alias("angle")
-    ).drop("g")
+    scored = with_geom_scores(pairs)
 
     # pre-normalized on the feature tables (see candidate_pairs) — per-pair
     # work is just the levenshtein ratio + equality
@@ -367,7 +316,7 @@ def score_pairs(pairs: DataFrame, threshold_m: float = DEFAULT_THRESHOLD_M) -> D
     ).filter(geom_ok)
 
 
-def best_matches(scored: DataFrame, cap: int = CANDIDATE_CAP) -> DataFrame:
+def best_matches(scored: DataFrame) -> DataFrame:
     """Deterministic best-match pick over the pinned candidate order
     (hits DESC, dist ASC, way_id ASC) — A2/A3.
 
@@ -377,10 +326,9 @@ def best_matches(scored: DataFrame, cap: int = CANDIDATE_CAP) -> DataFrame:
     moves ~|primaries| rows instead of all |pairs| rows.  (The struct
     buffer makes Spark pick SortAggregate — a sort on the grouping key
     only; the win is the partial-agg shuffle reduction, which a window
-    cannot do.)  The candidate cap (A3, ``cap``) cannot change
-    the result here: rank 1 lies within any cap ≥ 1, so the capped pick
-    equals the global best; the parameter is kept for API parity with the
-    reference's cap-7 loop (`conflator.py:349-354`).  Ties are impossible —
+    cannot do.)  The reference's candidate cap (A3, cap 7,
+    `conflator.py:349-354`) cannot change the result: rank 1 lies within any
+    cap ≥ 1, so the capped pick equals the global best.  Ties are impossible —
     way_id is unique within an ext_id's candidate set — so the pick is
     deterministic."""
     order = F.struct(

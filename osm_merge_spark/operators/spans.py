@@ -18,7 +18,7 @@ vectorized WKT parse); media decode itself is stubbed (see operators.media).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,10 +46,10 @@ def span_signature(spans: Column | str) -> Column:
     return F.concat_ws("\x02", parts)
 
 
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
-def _wkt_to_geom_udf(wkt: pd.Series) -> pd.Series:
-    kinds, offsets, flat = G.parse_wkt(wkt)
-    return pd.Series(G.arrays_from_ragged(offsets, flat))
+@F.arrow_udf(T.ArrayType(T.DoubleType()))
+def _wkt_to_geom_udf(wkt: pa.Array) -> pa.Array:
+    kinds, offsets, flat = G.parse_wkt(wkt.to_pandas())
+    return G.arrow_from_ragged(offsets, flat)
 
 
 def spans_to_features(docs: DataFrame) -> DataFrame:

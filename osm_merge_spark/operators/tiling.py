@@ -17,12 +17,14 @@ a coarse cell pre-join, so a feature can land in multiple tiles (the checked
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geometry as G
+from ..plans import stage
 
 M_PER_DEG_LAT = 110_540.0
 
@@ -152,19 +154,15 @@ def line_tiles_kernel(
 
 
 def _line_tiles_udf(min_lon: float, min_lat: float, dlon: float, dlat: float, nx: int, ny: int):
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tiles(geoms: pd.Series) -> pd.Series:
-        flat, offsets = G.ragged_from_arrays(geoms)
+    @F.arrow_udf(T.ArrayType(T.StringType()))
+    def _tiles(geoms: pa.Array) -> pa.Array:
+        flat, offsets = G.ragged_from_arrow(geoms)
+        # (row, tile) pairs sorted by row: each row's labels are one run
         rows, tid = line_tiles_kernel(flat, offsets, min_lon, min_lat, dlon, dlat, nx, ny)
-        out: list[list[str]] = [[] for _ in range(len(geoms))]
-        if len(rows):
-            labels = np.char.add("Task_", tid.astype(str))
-            bounds = np.nonzero(np.diff(rows))[0] + 1
-            chunks = np.split(labels, bounds)
-            uniq = np.concatenate(([rows[0]], rows[bounds]))
-            for r, chunk in zip(uniq.tolist(), chunks):
-                out[r] = chunk.tolist()
-        return pd.Series(out)
+        ends = np.zeros(len(geoms) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rows, minlength=len(geoms)), out=ends[1:])
+        labels = pc.binary_join_element_wise("Task_", pa.array(tid).cast(pa.string()), "")
+        return pa.ListArray.from_arrays(pa.array(ends), labels)
 
     # deterministic; marked nondeterministic to force single materialization
     return _tiles.asNondeterministic()
@@ -272,32 +270,25 @@ def clip_grid_to_aoi(grid: DataFrame, aoi_ring: list[tuple[float, float]], min_a
     """Task-grid AOI clip (`tm_splitter.py:144-177`): intersect every grid
     tile with the AOI *polygon* (not just its bbox) and drop fragments whose
     clipped area is below ``min_area_m2`` (the reference's 1e5 m² filter at
-    `:170-177`).  One Arrow batch pass; adds ``clip_geom`` (the fragment
-    ring, flat [x0,y0,...]) and ``area_m2``."""
+    `:170-177`).  One ``mapInArrow`` batch pass; adds ``clip_geom`` (the
+    fragment ring, flat [x0,y0,...]) and ``area_m2``."""
     ring = np.asarray(aoi_ring, dtype=np.float64)
 
-    _schema = T.StructType(
-        [
-            T.StructField("clip_geom", T.ArrayType(T.DoubleType())),
-            T.StructField("area_m2", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(_schema)
-    def _clip(min_lon: pd.Series, min_lat: pd.Series, max_lon: pd.Series, max_lat: pd.Series) -> pd.DataFrame:
+    def clip(batch: pa.RecordBatch):
         P, cnt = clip_rects_convex(
-            min_lon.to_numpy(), min_lat.to_numpy(), max_lon.to_numpy(), max_lat.to_numpy(), ring
+            *[batch.column(c).to_numpy() for c in ("min_lon", "min_lat", "max_lon", "max_lat")], ring
         )
-        area = polygon_area_m2_padded(P, cnt)
-        geoms = [P[i, : cnt[i]].reshape(-1) for i in range(len(cnt))]
-        return pd.DataFrame({"clip_geom": geoms, "area_m2": area})
+        offsets = np.zeros(len(cnt) + 1, dtype=np.int64)
+        np.cumsum(cnt, out=offsets[1:])
+        flat = P[np.arange(P.shape[1]) < cnt[:, None]]
+        return None, [G.arrow_from_ragged(offsets, flat), polygon_area_m2_padded(P, cnt)]
 
-    out = grid.withColumn("__c", _clip.asNondeterministic()("min_lon", "min_lat", "max_lon", "max_lat"))
-    return (
-        out.select("*", F.col("__c.clip_geom").alias("clip_geom"), F.col("__c.area_m2").alias("area_m2"))
-        .drop("__c")
-        .filter(F.col("area_m2") >= min_area_m2)
-    )
+    fields = [
+        T.StructField("clip_geom", T.ArrayType(T.DoubleType())),
+        T.StructField("area_m2", T.DoubleType()),
+    ]
+    out = stage.with_batch_columns(grid, fields, clip)
+    return out.filter(F.col("area_m2") >= min_area_m2)
 
 
 def write_by_tile(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -21,54 +21,42 @@ K=4, strips ~1.1×.
 
 The same columns power partition pruning for AOI-clipped queries: write the
 corpus partitioned by a strip/tile bucket and `WHERE` clauses skip files.
+
+The extent columns come from one ``mapInArrow`` batch pass
+(``stage.with_batch_columns``), so the slice filters above it cannot make
+Catalyst evaluate the kernel a second time.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geometry as G
+from . import stage
 
 # pad: max synthetic way extent (~4 segments × 0.004°) + threshold slack
 DEFAULT_PAD_DEG = 0.05
 
-_EXTENT_SCHEMA = T.StructType(
-    [
-        T.StructField("anchor_x", T.DoubleType()),
-        T.StructField("anchor_y", T.DoubleType()),
-        T.StructField("min_x", T.DoubleType()),
-        T.StructField("max_x", T.DoubleType()),
-    ]
-)
+_EXTENT_FIELDS = [T.StructField(c, T.DoubleType()) for c in ("anchor_x", "anchor_y", "min_x", "max_x")]
 
 
-@F.pandas_udf(_EXTENT_SCHEMA)
-def _extent_udf(geoms: pd.Series) -> pd.DataFrame:
-    flat, offsets = G.ragged_from_arrays(geoms)
-    n = len(offsets) - 1
-    anchor = np.full(n, np.nan)
-    anchor_y = np.full(n, np.nan)
-    has = np.diff(offsets) > 0
-    if flat.shape[0]:
-        anchor[has] = flat[offsets[:-1][has], 0]
-        anchor_y[has] = flat[offsets[:-1][has], 1]
-    bb = G.bbox_per_row(offsets, flat)
-    return pd.DataFrame({"anchor_x": anchor, "anchor_y": anchor_y, "min_x": bb[:, 0], "max_x": bb[:, 2]})
+def with_tile_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
+    """Attach (anchor_x, anchor_y, min_x, max_x): the first vertex and the
+    x-extent of each geometry, null for an empty one — one Arrow pass."""
 
+    def extents(batch: pa.RecordBatch):
+        flat, offsets = G.ragged_from_arrow(batch.column(geom_col))
+        anchor = np.full((len(offsets) - 1, 2), np.nan)
+        has = np.diff(offsets) > 0
+        anchor[has] = flat[offsets[:-1][has]]
+        bb = G.bbox_per_row(offsets, flat)
+        return None, [anchor[:, 0], anchor[:, 1], bb[:, 0], bb[:, 2]]
 
-def with_tile_columns(df: DataFrame, geom_col: str = "geom", pad_m: float = 7.0) -> DataFrame:
-    """Attach (anchor_x, min_x, max_x) — one Arrow pass."""
-    return df.withColumn("__e", _extent_udf(F.col(geom_col))).select(
-        "*",
-        F.col("__e.anchor_x").alias("anchor_x"),
-        F.col("__e.anchor_y").alias("anchor_y"),
-        F.col("__e.min_x").alias("min_x"),
-        F.col("__e.max_x").alias("max_x"),
-    ).drop("__e")
+    return stage.with_batch_columns(df, _EXTENT_FIELDS, extents)
 
 
 def range_boundaries(primary_with_tiles: DataFrame, k: int) -> list[float]:

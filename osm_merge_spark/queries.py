@@ -19,6 +19,7 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
@@ -1426,7 +1427,7 @@ def q_length_sentinel(spark, sf_dir):
     short external way → sentinel 0.0; (1) a >1 km way far from it →
     sentinel −1.0; (2) a matched-length parallel way → no trigger, real
     kernel distance.  Runs the production fused scoring kernel
-    (`conflate.geom_score_udf`), so the mismatch gate, `hull_contact`, and
+    (`conflate.with_geom_scores`), so the mismatch gate, `hull_contact`, and
     the distance kernel are all on the scored path."""
     pts = customer_points(spark, sf_dir)
     lon, lat = F.col("lon"), F.col("lat")
@@ -1441,11 +1442,8 @@ def q_length_sentinel(spark, sf_dir):
         new_geom.alias("geom_p"),
         F.when(r == 0, tri).when(r == 1, far).otherwise(near).alias("geom_s"),
     )
-    scored = pairs.select(
-        "c_custkey", "case_id", C.geom_score_udf(F.col("geom_p"), F.col("geom_s")).alias("s")
-    )
-    return scored.select(
-        "c_custkey", "case_id", F.round(F.col("s.dist"), 4).alias("dist_m")
+    return C.with_geom_scores(pairs).select(
+        "c_custkey", "case_id", F.round("dist", 4).alias("dist_m")
     ).orderBy("c_custkey")
 
 
@@ -2400,11 +2398,11 @@ def q_simplify_lines(spark, sf_dir):
 
     ways = synth.osm_ways(spark, sf_dir, n_pts=8)
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def simplify(geoms: pd.Series) -> pd.Series:
-        flat, off = G.ragged_from_arrays(geoms)
+    @F.arrow_udf(T.ArrayType(T.DoubleType()))
+    def simplify(geoms: pa.Array) -> pa.Array:
+        flat, off = G.ragged_from_arrow(geoms)
         no, nf = G.simplify_radial(off, flat, tol_deg=1e-3)
-        return pd.Series(G.arrays_from_ragged(no, nf))
+        return G.arrow_from_ragged(no, nf)
 
     out = ways.select("way_id", simplify("geom").alias("geom_simplified"), F.size("geom").alias("n_before"))
     return out.select("way_id", (F.size("geom_simplified") / 2).alias("n_after"), (F.col("n_before") / 2).alias("n_pts"))

@@ -18,9 +18,10 @@ driver's 50-row recording window).  Exit 0 = all stable.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 CONFIGS = [("local[4]", 7), ("local[16]", 64)]

@@ -22,11 +22,12 @@ this script is the full-registry sweep.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
 BAD = ("CartesianProduct", "BatchEvalPython")

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """spark-submit entry point for the checkpointed conflation job.
 
-Packaging + launch (the north rule's deployment shape):
+Packaging + launch (the north rule's deployment shape), from the root of
+the checkout:
 
-    cd /root/repo && zip -qr /tmp/osm_merge_spark.zip osm_merge_spark
+    zip -qr /tmp/osm_merge_spark.zip osm_merge_spark
     spark-submit --master local[32] \
         --py-files /tmp/osm_merge_spark.zip \
         scripts/submit_conflation.py \

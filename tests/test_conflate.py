@@ -2,12 +2,13 @@
 
 The oracle recomputes candidate generation (bbox prefilter, no cells), exact
 distances, scoring, and best-match selection in plain numpy/pandas — so the
-cell-join machinery (cover, ring expansion, dedup, window) is validated
+cell-join machinery (cover, border pad, dedup, best-match) is validated
 against a derivation that shares only the low-level kernels.
 """
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,8 +70,8 @@ def corpus(spark):
 
 def brute_force_matches(osm: pd.DataFrame, ext: pd.DataFrame, threshold=7.0):
     """Oracle: bbox prefilter → exact kernels → scoring → pinned-order top-1."""
-    o_flat, o_off = G.ragged_from_arrays(pd.Series(list(osm["geom"])))
-    e_flat, e_off = G.ragged_from_arrays(pd.Series(list(ext["geom"])))
+    o_flat, o_off = G.ragged_from_arrow(pa.array(list(osm["geom"]), type=pa.list_(pa.float64())))
+    e_flat, e_off = G.ragged_from_arrow(pa.array(list(ext["geom"]), type=pa.list_(pa.float64())))
     o_bb = G.bbox_per_row(o_off, o_flat)
     e_bb = G.bbox_per_row(e_off, e_flat)
     pad = threshold / 100_000.0 * 1.6  # generous degree pad

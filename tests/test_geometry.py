@@ -1,5 +1,6 @@
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from osm_merge_spark import geometry as G
@@ -23,6 +24,28 @@ def test_wkt_roundtrip():
     kinds2, offsets2, flat2 = G.parse_wkt(out)
     assert np.array_equal(kinds[:3], kinds2[:3])
     assert np.allclose(flat, flat2)
+
+
+def test_arrow_codec_nulls_slices_roundtrip():
+    geoms = pa.array(
+        [[1.0, 2.0, 3.0, 4.0], None, [], [5.0, 6.0]], type=pa.list_(pa.float64())
+    )
+    flat, off = G.ragged_from_arrow(geoms)
+    assert off.tolist() == [0, 2, 2, 2, 3]
+    assert flat.tolist() == [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
+    # a batch window starts at its own first row
+    flat, off = G.ragged_from_arrow(geoms.slice(1))
+    assert off.tolist() == [0, 0, 0, 1] and flat.tolist() == [[5.0, 6.0]]
+    # a null row backed by a non-empty sub-list contributes no vertices
+    masked = pa.ListArray.from_arrays(
+        pa.array([0, 2, 4, 6], type=pa.int32()),
+        pa.array([1.0, 2.0, 9.0, 9.0, 3.0, 4.0]),
+        mask=pa.array([False, True, False]),
+    )
+    flat, off = G.ragged_from_arrow(masked)
+    assert off.tolist() == [0, 1, 1, 2] and flat.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    back = G.arrow_from_ragged(off, flat)
+    assert back.to_pylist() == [[1.0, 2.0], [], [3.0, 4.0]]
 
 
 def test_haversine_known():

@@ -40,23 +40,6 @@ def test_parent_cell_consistency():
     assert np.array_equal(c10_direct, c10_parent)
 
 
-def test_k_ring_contains_neighbors():
-    c = grid.cell_id(np.array([-105.0]), np.array([40.0]), 18)
-    ring = grid.k_ring(c, 1)
-    assert ring.shape == (1, 9)
-    assert c[0] in ring[0]
-    # a point ~100m east should be inside the ring of the original cell
-    c_east = grid.cell_id(np.array([-105.0 + 0.0015]), np.array([40.0]), 18)
-    assert c_east[0] in ring[0]
-    assert len(np.unique(ring[0])) == 9
-
-
-def test_ring_for_threshold_derived():
-    # 7m threshold at z18, |lat|<=60 → ring 1; 500m → bigger ring
-    assert grid.ring_for_threshold(7.0, 18, 60.0) == 1
-    assert grid.ring_for_threshold(500.0, 18, 60.0) >= 5
-
-
 def test_cover_polyline_matches_pointwise():
     # a diagonal line across several cells
     xy = np.array([[-105.0, 40.0], [-104.99, 40.006]])

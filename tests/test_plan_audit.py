@@ -136,3 +136,32 @@ def test_ngram_jaccard_intersects_once_per_pair(spark, monkeypatch):
         frames.clear()
         qs[name](spark, SF)
         assert heavy_calls(frames[-1])["array_intersect("] == 1, name
+
+
+def test_candidate_pairs_normalizes_each_side_once(spark, tmp_path):
+    """One 15-call name normalization per side, on single-branch inputs.
+    (The synthetic primary is a 2-branch union, and the payload projection
+    is pushed into each branch, so the flagship plan shows 3 x 15 calls —
+    still once per row.)"""
+    from osm_merge_spark.operators import conflate as C
+    from osm_merge_spark.sources import synth
+    from scripts.plan_audit import heavy_calls
+
+    synth.external_ways(spark, SF).write.parquet(str(tmp_path / "ext"))
+    synth.osm_ways(spark, SF).write.parquet(str(tmp_path / "osm"))
+    ext = spark.read.parquet(str(tmp_path / "ext"))
+    osm = spark.read.parquet(str(tmp_path / "osm"))
+    assert heavy_calls(C.candidate_pairs(ext, osm))["regexp_replace("] == 30
+
+
+def test_opening_hours_parses_each_month_once(spark):
+    """opening_hours parses each of the two months once (one array lookup
+    per name, not a 12-way CASE over the parse); is_seasonal parses each
+    twice more, for its validity and its full-year test.  The trails
+    converter adds its two other regexp_extract calls."""
+    import __spark_entry__ as entry
+    from scripts.plan_audit import heavy_calls
+
+    qs = entry.queries()
+    assert heavy_calls(qs["q_opening_hours"](spark, SF))["regexp_extract("] == 6
+    assert heavy_calls(qs["q_converter_trails"](spark, SF))["regexp_extract("] == 8

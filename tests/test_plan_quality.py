@@ -38,12 +38,27 @@ def test_flagship_no_cartesian_or_nested_loop(flagship_plan):
 
 
 def test_flagship_python_boundary_bounded(flagship_plan):
-    # exactly 3 Arrow boundaries: cover per side + the pair-scoring kernel;
-    # a 4th means a UDF got re-evaluated (the stacked-ArrowEvalPython bug
-    # asNondeterministic() exists to prevent).  Formatted plans print each
-    # node in the tree and in the details — count unique "(n) Node" entries.
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", flagship_plan)) <= 3
+    # exactly 3 Python boundaries, all batch functions: the cover per side
+    # and the pair-scoring kernel.  A scalar UDF (ArrowEvalPython) here
+    # could be evaluated twice once a filter is pushed past it.  Formatted
+    # plans print each node in the tree and in the details — count unique
+    # "(n) Node" entries.
+    assert len(re.findall(r"\(\d+\) MapInArrow", flagship_plan)) == 3
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", flagship_plan)) == 0
     assert "BatchEvalPython" not in flagship_plan  # no row-at-a-time Python
+
+
+def test_range_slice_evaluates_extents_once(spark):
+    # the slice filter sits on the extent columns; a scalar UDF under it was
+    # pushed into each union branch and evaluated twice per branch
+    from osm_merge_spark.plans import distribute as DST
+
+    ext = DST.with_tile_columns(synth.external_ways(spark, SF))
+    plan = plan_of(DST.primary_slice(ext, [-105.0], 0))
+    branches = len(re.findall(r"\(\d+\) Union", plan)) + 1
+    python_nodes = len(re.findall(r"\(\d+\) (?:MapInArrow|ArrowEvalPython)", plan))
+    assert 1 <= python_nodes <= branches
+    assert "ArrowEvalPython" not in plan
 
 
 def test_flagship_best_match_partial_agg(flagship_plan):
