@@ -195,11 +195,6 @@ def cover_polyline(
     seg_a, seg_b = seg_a[keep], seg_b[keep]
     seg_rows = seg_row[:-1][keep]
 
-    if seg_a.shape[0] == 0:  # all single-point rows
-        cells = cell_id(flat_xy[:, 0], flat_xy[:, 1], z)
-        rows = np.repeat(np.arange(n_rows, dtype=np.int64), np.diff(offsets))
-        return cells, rows
-
     # samples per segment: ceil(len / (cell/2)) with a cap
     mean_lat = np.abs(seg_a[:, 1] + seg_b[:, 1]) / 2.0
     mx = 111_320.0 * np.cos(np.radians(mean_lat))

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,28 +88,60 @@ DEFAULT_CONFLATE_ZOOM = 16
 # Cell cover and pair scoring: the only Python in the pipeline
 # ---------------------------------------------------------------------------
 
-BBOX_COLS = ("min_lon", "min_lat", "max_lon", "max_lat")
+# The bbox crosses the cell-join exchange as two longs, ``bb_lo`` (min
+# corner) and ``bb_hi`` (max corner), each packing lon (high 32 bits) and lat
+# (low 32 bits) as int32 fixed-point at 1e-7 degree (~1 cm).  Rounding is
+# outward — floor the minimums, ceil the maximums, plus one unit against the
+# float error of x·1e7 — so the packed box contains the true one and the
+# bbox-gap prefilter stays a lower bound on distance.  Values clamp to the
+# int32 range (±214.7°, beyond any valid coordinate): clamping is monotone
+# and shrinks differences, so even then no gap grows.  A non-finite bbox
+# packs to null, and the prefilter drops its rows.
+BBOX_SCALE = 1e7
+_I32 = (-(1 << 31), (1 << 31) - 1)
+
+
+def pack_bbox(bbox: np.ndarray) -> tuple[pa.Array, pa.Array]:
+    """(n, 4) [min_lon, min_lat, max_lon, max_lat] → (bb_lo, bb_hi) int64
+    arrays of outward-rounded fixed-point corners; null where any bbox value
+    is not finite."""
+    finite = np.isfinite(bbox).all(axis=1)
+    fixed = np.nan_to_num(bbox * BBOX_SCALE)
+    lo = np.clip(np.floor(fixed[:, :2]) - 1, *_I32).astype(np.int64)
+    hi = np.clip(np.ceil(fixed[:, 2:]) + 1, *_I32).astype(np.int64)
+
+    def pack(xy):
+        return pa.array((xy[:, 0] << 32) | (xy[:, 1] & 0xFFFFFFFF), mask=~finite)
+
+    return pack(lo), pack(hi)
+
+
+def unpack_bbox(packed: str) -> tuple[Column, Column]:
+    """JVM-side inverse of one :func:`pack_bbox` corner: (lon, lat) as
+    fixed-point longs (units of 1/BBOX_SCALE degree)."""
+    return F.shiftright(packed, 32), F.shiftright(F.shiftleft(packed, 32), 32)
 
 
 def with_cells(
     df: DataFrame, geom_col: str = "geom", zoom: int = grid.DEFAULT_ZOOM, pad_m: float = 0.0
 ) -> DataFrame:
     """Explode df to one row per covering cell (the join-key manufacture):
-    df's columns + ``cell`` + the feature's bbox (``BBOX_COLS``), which
-    powers the JVM-side pair prefilter.  ``pad_m`` applies the border-epsilon
-    expansion (neighbor cells only where the geometry runs within pad_m of a
-    tile border) — ~1.1-1.3x cells versus 9x for a blanket k-ring.  Rows with
-    an empty or null geometry cover no cell and drop out."""
+    df's columns except ``geom_col`` + ``cell`` + the feature's packed bbox
+    (``bb_lo``, ``bb_hi``; see :func:`pack_bbox`), which powers the
+    JVM-side pair prefilter.  The geometry is consumed here and does not
+    come back from Python.  ``pad_m`` applies the border-epsilon expansion
+    (neighbor cells only where the geometry runs within pad_m of a tile
+    border) — ~1.1-1.3x cells versus 9x for a blanket k-ring.  Rows with an
+    empty or null geometry cover no cell and drop out."""
 
     def cover(batch: pa.RecordBatch):
         flat, offsets = G.ragged_from_arrow(batch.column(geom_col))
         # sorted, unique (row, cell) pairs: the exploded rows in input order
         cells, rows = grid.cover_polyline(flat, offsets, zoom, pad_m=pad_m)
-        bb = G.bbox_per_row(offsets, flat)[rows]
-        return rows, [cells, *bb.T]
+        return rows, [cells, *pack_bbox(G.bbox_per_row(offsets, flat)[rows])]
 
-    fields = [T.StructField("cell", T.LongType())] + [T.StructField(c, T.DoubleType()) for c in BBOX_COLS]
-    return stage.with_batch_columns(df, fields, cover)
+    fields = [T.StructField(c, T.LongType()) for c in ("cell", "bb_lo", "bb_hi")]
+    return stage.with_batch_columns(df, fields, cover, consumed=[geom_col])
 
 
 # padded-kernel budget: Pa·Pb per pair beyond this routes to the ragged
@@ -161,10 +193,14 @@ def geom_scores(geom_a: pa.Array, geom_b: pa.Array) -> list[np.ndarray]:
 
 def with_geom_scores(pairs: DataFrame) -> DataFrame:
     """pairs + (dist, dslope, angle) from :func:`geom_scores` over the
-    ``geom_p`` (new) and ``geom_s`` (old) columns, one ``mapInArrow`` pass."""
+    ``geom_p`` (new) and ``geom_s`` (old) columns, one ``mapInArrow`` pass.
+    The two geometries are consumed: they do not come back from Python."""
     fields = [T.StructField(c, T.DoubleType()) for c in ("dist", "dslope", "angle")]
     return stage.with_batch_columns(
-        pairs, fields, lambda batch: (None, geom_scores(batch.column("geom_p"), batch.column("geom_s")))
+        pairs,
+        fields,
+        lambda batch: (None, geom_scores(batch.column("geom_p"), batch.column("geom_s"))),
+        consumed=["geom_p", "geom_s"],
     )
 
 
@@ -190,10 +226,10 @@ def candidate_pairs(
     re-attaches them to the ~|primaries| winners after best-match selection,
     per guide §8 "decide with small rows, move big rows once".)
     """
-    # Late materialization: the cell join runs over NARROW (id, cell, bbox)
-    # rows only — a skewed hot cell then costs slim pairs, not wide payload
-    # rows, and the shuffle moves a fraction of the bytes.  Payloads
-    # re-attach after pair dedupe via two evenly-hashed id joins.
+    # Late materialization: the cell join runs over NARROW (id, cell, bb_lo,
+    # bb_hi) rows only, four longs — a skewed hot cell then costs slim pairs,
+    # not wide payload rows, and the shuffle moves a fraction of the bytes.
+    # Payloads re-attach after pair dedupe via two evenly-hashed id joins.
     # Normalization runs HERE, once per feature — not per candidate pair.
     # (name normalization is a 14-regex chain; evaluating it per pair
     # multiplied JVM cost ~10x on dense corpora.)
@@ -211,10 +247,10 @@ def candidate_pairs(
     )
     # border-epsilon pad on the primary side replaces the 9x k-ring explode
     p = with_cells(primary.select("ext_id", "geom"), "geom", zoom, pad_m=threshold_m).select(
-        "ext_id", "cell", *[F.col(c).alias(c + "_p") for c in BBOX_COLS]
+        "ext_id", "cell", F.col("bb_lo").alias("bb_lo_p"), F.col("bb_hi").alias("bb_hi_p")
     )
     s = with_cells(secondary.select("way_id", "geom"), "geom", zoom, pad_m=0.0).select(
-        "way_id", "cell", *[F.col(c).alias(c + "_s") for c in BBOX_COLS]
+        "way_id", "cell", F.col("bb_lo").alias("bb_lo_s"), F.col("bb_hi").alias("bb_hi_s")
     )
 
     # Replicate-small salt (r6): cells of the secondary side above
@@ -244,17 +280,17 @@ def candidate_pairs(
     # JVM-side bbox-gap prefilter: equirectangular bbox distance lower-bounds
     # the true distance, so pairs whose boxes sit further apart than the
     # threshold can never match — they are dropped before the expensive
-    # kernel (and before the dedupe shuffle).
-    lon_gap = F.greatest(
-        F.greatest("min_lon_p", "min_lon_s") - F.least("max_lon_p", "max_lon_s"), F.lit(0.0)
-    )
-    lat_gap = F.greatest(
-        F.greatest("min_lat_p", "min_lat_s") - F.least("max_lat_p", "max_lat_s"), F.lit(0.0)
-    )
-    max_abs = F.greatest(*[F.abs(c) for c in ("min_lat_p", "max_lat_p", "min_lat_s", "max_lat_s")])
+    # kernel (and before the dedupe shuffle).  The packed boxes contain the
+    # true ones, so their gap is no larger and the bound still holds.
+    (min_lon_p, min_lat_p), (max_lon_p, max_lat_p) = unpack_bbox("bb_lo_p"), unpack_bbox("bb_hi_p")
+    (min_lon_s, min_lat_s), (max_lon_s, max_lat_s) = unpack_bbox("bb_lo_s"), unpack_bbox("bb_hi_s")
+    lon_gap = F.greatest(F.greatest(min_lon_p, min_lon_s) - F.least(max_lon_p, max_lon_s), F.lit(0))
+    lat_gap = F.greatest(F.greatest(min_lat_p, min_lat_s) - F.least(max_lat_p, max_lat_s), F.lit(0))
+    max_abs = F.greatest(*[F.abs(c) for c in (min_lat_p, max_lat_p, min_lat_s, max_lat_s)]) / BBOX_SCALE
     # cos at the pair's max |lat| under-estimates lon meters → conservative
     gap_m = F.sqrt(
-        F.pow(lon_gap * 111_320.0 * F.cos(F.radians(max_abs)), 2) + F.pow(lat_gap * 110_540.0, 2)
+        F.pow(lon_gap / BBOX_SCALE * 111_320.0 * F.cos(F.radians(max_abs)), 2)
+        + F.pow(lat_gap / BBOX_SCALE * 110_540.0, 2)
     )
     joined = joined.filter(gap_m <= threshold_m)
 
@@ -320,25 +356,29 @@ def best_matches(scored: DataFrame) -> DataFrame:
     """Deterministic best-match pick over the pinned candidate order
     (hits DESC, dist ASC, way_id ASC) — A2/A3.
 
-    Implemented as a ``min_by`` aggregation rather than a row_number
-    window: partial (map-side) aggregation collapses every partition to at
-    most one candidate per ext_id *before* the exchange, so the shuffle
-    moves ~|primaries| rows instead of all |pairs| rows.  (The struct
-    buffer makes Spark pick SortAggregate — a sort on the grouping key
-    only; the win is the partial-agg shuffle reduction, which a window
-    cannot do.)  The reference's candidate cap (A3, cap 7,
+    Implemented as ``min(struct(-hits, dist, way_id, <the other columns>))``
+    per ext_id rather than a row_number window: partial (map-side)
+    aggregation collapses every partition to at most one candidate per
+    ext_id *before* the exchange, so the shuffle moves ~|primaries| rows
+    instead of all |pairs| rows, and each of those rows carries every value
+    once, ordering fields first (a ``min_by(payload, order)`` buffer writes
+    the ordering fields twice).  The flagship's row is (ext_id,
+    struct(-hits, dist, way_id, dslope, angle, name_ratio, ref_ratio)).
+    (The struct buffer makes Spark pick SortAggregate — a sort on the
+    grouping key only.)  The reference's candidate cap (A3, cap 7,
     `conflator.py:349-354`) cannot change the result: rank 1 lies within any
     cap ≥ 1, so the capped pick equals the global best.  Ties are impossible —
-    way_id is unique within an ext_id's candidate set — so the pick is
-    deterministic."""
-    order = F.struct(
-        (-F.col("hits")).alias("h"), F.col("dist").alias("d"), F.col("way_id").alias("w")
-    )
-    payload = F.struct(*[c for c in scored.columns if c != "ext_id"])
+    way_id is unique within an ext_id's candidate set, so the leading
+    fields already decide the minimum and the pick is deterministic."""
+    rest = [c for c in scored.columns if c not in ("ext_id", "hits", "dist", "way_id")]
+    best = F.col("__best")
     return (
         scored.groupBy("ext_id")
-        .agg(F.min_by(payload, order).alias("__best"))
-        .select("ext_id", "__best.*")
+        .agg(F.min(F.struct((-F.col("hits")).alias("neg_hits"), "dist", "way_id", *rest)).alias("__best"))
+        .select(
+            "ext_id",
+            *[(-best["neg_hits"] if c == "hits" else best[c]).alias(c) for c in scored.columns if c != "ext_id"],
+        )
     )
 
 
@@ -362,14 +402,12 @@ def conflate(
     geoms and pre-normalized names only.  The heavy columns (tag maps,
     version, output geometry) attach to the ~|primaries| winners AFTER
     best-match selection via two id equi-joins, so the pair joins, the
-    Arrow kernel batches, the min_by exchange and the persisted best-match
+    Arrow kernel batches, the best-match exchange and the persisted best-match
     table all carry narrow rows.
     """
     pairs = candidate_pairs(primary, secondary, threshold_m, zoom, salt_hot_threshold=salt_hot_threshold)
     scored = score_pairs(pairs, threshold_m)
-    # decision columns only: geoms served the kernel and are re-attachable
-    # by id — dropping them before the aggregation shrinks the min_by
-    # shuffle and the persisted cache by ~an order of magnitude
+    # decision columns only: the normalized names served the scoring
     slim = scored.select(
         "ext_id", "way_id", "hits", "dist", "dslope", "angle", "name_ratio", "ref_ratio"
     )

@@ -69,7 +69,10 @@ def knn_join(
     """For each probe point, the k nearest target points within tolerance.
 
     probes:  (probe_id, lon, lat, ...); targets: (target_id, lon, lat, ...).
-    Returns probe columns + target id + ``dist`` + ``rank``.
+    Returns (probe_id, target_id, p_lon, p_lat, dist, rank).  At k = 1 the
+    nearest pick is ``min(struct(dist, target_id, p_lon, p_lat))`` per
+    probe, partially aggregated before its exchange: the shuffled row is the
+    probe id and that one struct.
     Entirely JVM-side: cell equi-join + haversine + nearest pick.  Exact
     for points within the mercator latitude range (|lat| ≤ 85.05112878).
 
@@ -134,25 +137,19 @@ def knn_join(
     )
     joined = joined.filter(F.col("dist") <= tolerance_m)
     if k == 1:
-        # nearest-only (the reference's case): one min_by aggregation
+        # nearest-only (the reference's case): one min(struct) aggregation
         # replaces the pair-dedupe shuffle AND the rank window — map-side
         # partial agg collapses to one row per probe before the exchange
         # (SortAggregate due to the struct buffer; the shuffle reduction is
-        # the win).
-        # Ring-duplicate rows of the same pair carry identical coordinates,
-        # hence identical dist, so the (dist, target_id) pick stays
-        # deterministic without deduping first.
-        payload = F.struct(
-            F.col(target_id).alias(target_id),
-            F.col("p_lon").alias("p_lon"),
-            F.col("p_lat").alias("p_lat"),
-            F.col("dist").alias("dist"),
-        )
-        order = F.struct(F.col("dist").alias("d"), F.col(target_id).alias("t"))
+        # the win).  The struct leads with the ordering (dist, target id),
+        # so each value crosses the exchange once.  Ring-duplicate rows of
+        # the same pair are identical rows, so the pick stays deterministic
+        # without deduping first.
+        best = F.min(F.struct("dist", target_id, "p_lon", "p_lat")).alias("__b")
         return (
             joined.groupBy(probe_id)
-            .agg(F.min_by(payload, order).alias("__b"))
-            .select(probe_id, "__b.*")
+            .agg(best)
+            .select(probe_id, *[F.col("__b")[c].alias(c) for c in (target_id, "p_lon", "p_lat", "dist")])
             .withColumn("rank", F.lit(1))
         )
     # a target can reach a probe through several ring cells → dedupe pair

@@ -24,7 +24,7 @@ each Arrow record batch, which no filter can be pushed into.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
@@ -40,7 +40,10 @@ def keep_where(df: DataFrame, cond: Column) -> DataFrame:
 
 
 def with_batch_columns(
-    df: DataFrame, fields: list[T.StructField], kernel: Callable[[pa.RecordBatch], tuple]
+    df: DataFrame,
+    fields: list[T.StructField],
+    kernel: Callable[[pa.RecordBatch], tuple],
+    consumed: Sequence[str] = (),
 ) -> DataFrame:
     """``df`` with ``fields`` appended, computed by ``kernel`` over each Arrow
     record batch in one ``mapInArrow`` pass.
@@ -49,10 +52,14 @@ def with_batch_columns(
     array per field, and ``rows`` either None (one output row per input row,
     in order) or the input row index of each output row, so a row may repeat
     or vanish (an explode).  NaN comes out as null, as it does from a pandas
-    UDF.
+    UDF.  The ``consumed`` columns are read by the kernel and left out of
+    the output: Catalyst cannot prune a column through ``mapInArrow``, so a
+    column carried back would cross the boundary a second time and ride
+    every row to the consumer's projection.
     """
+    kept = [i for i, f in enumerate(df.schema.fields) if f.name not in consumed]
     # a new StructType: ``df.schema`` is cached, and ``.add`` would mutate it
-    schema = T.StructType(df.schema.fields + fields)
+    schema = T.StructType([df.schema.fields[i] for i in kept] + fields)
     names = schema.fieldNames()
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -60,6 +67,7 @@ def with_batch_columns(
             if not batch.num_rows:
                 continue
             rows, columns = kernel(batch)
+            batch = batch.select(kept)
             if rows is not None:
                 batch = batch.take(pa.array(rows))
             added = [c if isinstance(c, pa.Array) else pa.array(c, from_pandas=True) for c in columns]

@@ -13,7 +13,9 @@ sf0.001 and assert the 100 TB anti-pattern contract on each formatted plan:
 
 Each line also shows, as information only, the most repeated heavy calls
 in the query's optimized plan (:func:`heavy_calls`): a heavy expression
-copied into many consumers is evaluated once per copy.
+copied into many consumers is evaluated once per copy; and the columns of
+the query's widest shuffle exchange (:func:`exchange_columns`): every value
+an exchange row carries is written, read and hashed once per row.
 
 Usage: python scripts/plan_audit.py  →  exit 0 clean / 1 with findings.
 tests/test_plan_audit.py pins the high-risk subset on every pytest run;
@@ -80,6 +82,46 @@ def heavy_calls(df) -> Counter:
     return Counter({c: k for c, k in counts.items() if k})
 
 
+def exchange_columns(df) -> list[dict]:
+    """Each shuffle exchange in ``df``'s physical plan (before execution, as
+    AQE starts it; persisted frames included):
+    ``{"partitioning": str, "columns": [(name, type)]}``, the columns being
+    the exchange's output, i.e. what every shuffled row carries.  Broadcast
+    exchanges are left out."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            todo.append(node.executedPlan())
+            continue
+        if name.startswith("InMemoryTableScan"):  # a persisted frame's plan
+            todo.append(node.relation().cachedPlan())
+            continue
+        if name == "Exchange":
+            out = node.output()
+            cols = [out.apply(i) for i in range(out.size())]
+            found.append({
+                "partitioning": node.outputPartitioning().toString(),
+                "columns": [(a.name(), a.dataType().simpleString()) for a in cols],
+            })
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+def widest_exchange(df) -> str:
+    """The exchange whose rows carry the most columns, as
+    "widest exchange n cols (typexk ...)" (empty when the plan has no
+    shuffle)."""
+    exchanges = exchange_columns(df)
+    if not exchanges:
+        return ""
+    cols = max((x["columns"] for x in exchanges), key=len)
+    types = Counter(t for _, t in cols)
+    return f"widest exchange {len(cols)} cols (" + " ".join(f"{t}x{k}" for t, k in types.most_common()) + ")"
+
+
 def audit(names: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
@@ -103,6 +145,7 @@ def audit(names: list[str] | None = None) -> int:
             df = qs[name](spark, SF)
             plan = plan_of(df)
             heavy = heavy_calls(df)
+            wide = widest_exchange(df)
         except Exception as e:  # a query that cannot even plan is a finding
             findings.append(f"{name}: failed to build plan: {str(e)[:200]}")
             print(f"BAD  {name}: failed to build plan", flush=True)
@@ -122,7 +165,7 @@ def audit(names: list[str] | None = None) -> int:
             )
         findings.extend(mine)
         top = " ".join(f"{c}x{k}" for c, k in heavy.most_common(3))
-        print(f"{'BAD ' if mine else 'ok  '} {name}: {len(plan)} chars  {top}".rstrip(), flush=True)
+        print(f"{'BAD ' if mine else 'ok  '} {name}: {len(plan)} chars  {top}  {wide}".rstrip(), flush=True)
     print()
     if findings:
         print("FINDINGS:")

@@ -183,3 +183,33 @@ def test_length_sentinel_branches_fire(spark):
     assert (by_case.loc[0] == 0.0).all()      # long triangle hull contains new way
     assert (by_case.loc[1] == -1.0).all()     # long far way: sentinel
     assert by_case.loc[2]["min"] > 0.0        # matched lengths: trigger never fires
+
+
+def test_packed_bbox_contains_true_bbox(spark):
+    """The packed bbox, decoded JVM-side as the prefilter decodes it,
+    contains the true bbox (so the bbox gap stays a lower bound) and is at
+    most 2 units (1e-7 degree) wider plus float error; a non-finite bbox
+    packs to null."""
+    from fractions import Fraction
+
+    lons = [-180.0, -179.9999999, -105.1234567, -1e-7, -0.0, 0.0, 5e-8, 1e-7, 12.3456789, 179.9999999, 180.0]
+    lats = [-90.0, -85.05112878, -40.00000005, -1e-7, 0.0, 1e-7, 39.9999999, 85.05112878, 90.0]
+    edge = [(x, y, x, y) for x in lons for y in lats] + [(lons[0], lats[0], lons[-1], lats[-1])]
+    rng = np.random.default_rng(7)
+    lo = np.column_stack([rng.uniform(-180, 180, 200), rng.uniform(-90, 90, 200)])
+    hi = np.minimum(lo + rng.exponential(1e-3, (200, 2)), [180.0, 90.0])
+    bbox = np.vstack([np.array(edge), np.hstack([lo, hi]), [[np.nan, 0, 1, 1], [0, 0, np.inf, 1]]])
+
+    bb_lo, bb_hi = C.pack_bbox(bbox)
+    df = spark.createDataFrame(list(zip(bb_lo.to_pylist(), bb_hi.to_pylist())), "bb_lo long, bb_hi long")
+    got = df.select(*C.unpack_bbox("bb_lo"), *C.unpack_bbox("bb_hi")).collect()
+    assert len(got) == len(bbox)
+    for row, box in zip(got, bbox):
+        if not np.isfinite(box).all():
+            assert all(v is None for v in row)
+            continue
+        fixed = [Fraction(v, int(C.BBOX_SCALE)) for v in row]
+        true = [Fraction(float(v)) for v in box]
+        assert fixed[0] <= true[0] and fixed[1] <= true[1], (box, row)
+        assert fixed[2] >= true[2] and fixed[3] >= true[3], (box, row)
+        assert all(abs(f - t) < Fraction(3, int(C.BBOX_SCALE)) for f, t in zip(fixed, true)), (box, row)

@@ -67,6 +67,21 @@ def test_cover_polyline_multirow_and_points():
     assert pt_cell in cells[rows == 1]
 
 
+def test_cover_pads_points_in_any_batch():
+    """A point within pad_m of a tile border gets the neighbor cell whether
+    or not a line shares its batch: the cover is a pure function of the
+    geometry."""
+    z, lat = 16, 40.0
+    border = 13654 / (1 << z) * 360.0 - 180.0  # west edge of tile x=13654
+    pt = np.array([[border - 1.0 / (111_320.0 * np.cos(np.radians(lat))), lat]])
+    alone, _ = grid.cover_polyline(pt, np.array([0, 1]), z, pad_m=7.0)
+    line = np.array([[-104.9, 40.1], [-104.89, 40.1]])
+    cells, rows = grid.cover_polyline(np.vstack([pt, line]), np.array([0, 1, 3]), z, pad_m=7.0)
+    _, x, _ = grid.cell_zxy(alone)
+    assert sorted(x.tolist()) == [13653, 13654]
+    assert sorted(alone.tolist()) == sorted(cells[rows == 0].tolist())
+
+
 def test_cell_size_m():
     assert grid.cell_size_m(18, 0.0) == pytest.approx(152.87, rel=1e-3)
     assert grid.cell_size_m(18, 60.0) == pytest.approx(152.87 / 2, rel=1e-2)

@@ -89,6 +89,25 @@ def test_heavy_calls_counts_optimized_plan(spark):
     assert heavy_calls(spark.range(1).select(F.atan("id"))) == {}
 
 
+def test_exchange_columns_lists_shuffled_rows(spark):
+    from pyspark.sql import functions as F
+
+    from scripts.plan_audit import exchange_columns, widest_exchange
+
+    df = spark.range(10).select("id", (F.col("id") * 0.5).alias("x"), F.lit("a").alias("s"))
+    shuffled = df.repartition(4, "id").persist()  # a persisted plan is read too
+    try:
+        out = exchange_columns(shuffled.groupBy("s").agg(F.max("x").alias("m")))
+    finally:
+        shuffled.unpersist()
+    assert len(out) == 2
+    by_key = {x["partitioning"].split("#")[0]: x["columns"] for x in out}
+    assert by_key["hashpartitioning(id"] == [("id", "bigint"), ("x", "double"), ("s", "string")]
+    assert by_key["hashpartitioning(s"] == [("s", "string"), ("max", "double")]
+    assert widest_exchange(df.repartition(2, "id")) == "widest exchange 3 cols (bigintx1 doublex1 stringx1)"
+    assert exchange_columns(df) == [] and widest_exchange(df) == ""
+
+
 def test_knn_tile_math_once_and_no_lambda(spark):
     from pyspark.sql import functions as F
 

@@ -48,6 +48,45 @@ def test_flagship_python_boundary_bounded(flagship_plan):
     assert "BatchEvalPython" not in flagship_plan  # no row-at-a-time Python
 
 
+def test_flagship_python_outputs_drop_consumed_geometry(flagship_plan):
+    # the cover and score batch functions consume the geometries: none comes
+    # back from Python to be projected away in the JVM
+    outputs = re.findall(
+        r"\(\d+\) MapInArrow\nInput \[\d+\]: \[[^\]]*\]\nArguments: [^\n]*, \[([^\]]*)\]", flagship_plan
+    )
+    assert len(outputs) == 3
+    names = {c.split("#")[0] for out in outputs for c in out.split(", ")}
+    assert {"cell", "bb_lo", "dist"} <= names
+    assert not names & {"geom", "geom_p", "geom_s"}
+
+
+def test_flagship_cell_join_rows_carry_no_doubles(spark):
+    # the bbox crosses the cell join packed into two longs per row
+    from scripts.plan_audit import exchange_columns
+
+    conflated, _ = C.conflate(synth.external_ways(spark, SF), synth.osm_ways(spark, SF), persist_best=False)
+    cell_join = [x for x in exchange_columns(conflated) if x["partitioning"].startswith("hashpartitioning(cell#")]
+    assert len(cell_join) == 2
+    for x in cell_join:
+        assert [t for _, t in x["columns"]] == ["bigint"] * 4, x
+
+
+def test_overlap_join_exchanges_on_one_key(spark):
+    from osm_merge_spark.operators import buildings as B
+    from scripts.plan_audit import exchange_columns
+
+    boxes = spark.range(10).select(
+        F.col("id").alias("bld_id"),
+        (F.col("id") * 0.001).alias("min_lon"), F.lit(0.0).alias("min_lat"),
+        (F.col("id") * 0.001 + 0.002).alias("max_lon"), F.lit(0.001).alias("max_lat"),
+    )
+    exchanges = exchange_columns(B.overlap_join(boxes, boxes.withColumnRenamed("bld_id", "osm_bld_id")))
+    assert len(exchanges) == 2
+    for x in exchanges:
+        assert re.fullmatch(r"hashpartitioning\(bx#\d+L, \d+\)", x["partitioning"]), x
+        assert "bx" in dict(x["columns"]) and "by" not in dict(x["columns"])
+
+
 def test_range_slice_evaluates_extents_once(spark):
     # the slice filter sits on the extent columns; a scalar UDF under it was
     # pushed into each union branch and evaluated twice per branch
@@ -62,10 +101,12 @@ def test_range_slice_evaluates_extents_once(spark):
 
 
 def test_flagship_best_match_partial_agg(flagship_plan):
-    # the min_by best-match must partial-aggregate before its exchange —
+    # the best-match pick must partial-aggregate before its exchange —
     # a Window here would shuffle every scored pair
     assert re.search(r"SortAggregate|HashAggregate|ObjectHashAggregate", flagship_plan)
     assert "Window" not in flagship_plan
+    # min(struct(ordering..., rest...)): min_by would carry the ordering twice
+    assert "min_by" not in flagship_plan
 
 
 def test_filter_and_column_pushdown(spark):
@@ -97,6 +138,7 @@ def test_knn_k1_single_agg_no_window(spark):
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan  # point joins are all-JVM
+    assert "min_by" not in plan  # the pick is min(struct(dist, id, ...))
 
 
 def test_salt_map_inlined_not_joined(spark):
