@@ -43,11 +43,6 @@ def drop_junk_tags(tags: Column | str) -> Column:
     )
 
 
-def has_tag(tags: Column | str, key: str) -> Column:
-    t = F.col(tags) if isinstance(tags, str) else tags
-    return F.map_contains_key(t, F.lit(key))
-
-
 def tag(tags: Column | str, key: str) -> Column:
     t = F.col(tags) if isinstance(tags, str) else tags
     return F.element_at(t, F.lit(key))

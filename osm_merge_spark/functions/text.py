@@ -188,35 +188,6 @@ def simhash16_from_hashes(hs: Column) -> Column:
 SIMHASH64_MULTS = (31, 37, 41, 43)
 
 
-def simhash64_blocks(text: Column | str) -> Column:
-    """64-bit SimHash as FOUR independent 16-bit blocks (array<bigint>).
-
-    Each block votes its 16 bits from a token-hash family with its own
-    polynomial multiplier, so the blocks are independent — exactly the
-    4×16-bit band decomposition the near-dup join buckets on.  Kept as four
-    small positive ints (not one packed int64) so the SQL oracle needs no
-    unsigned arithmetic and band buckets are free projections.
-
-    Scale note (vs the 16-bit variant): at 10^12 docs a 16-bit simhash has
-    only 2^8 half-block buckets → ~10^9.5 docs per bucket → quadratic
-    self-join.  4×16-bit bands give 65,536 buckets per band and the classic
-    guarantee that hamming ≤ 3 over 64 bits ⇒ at least one band is equal.
-    """
-
-    def voter(b: int):
-        return lambda acc, h: acc + (F.shiftright(h, b) % 2) * 2 - 1
-
-    blocks = []
-    for mult in SIMHASH64_MULTS:
-        hs = F.transform(tokens(text), lambda tok: string_poly_hash(tok, mult))
-        out = F.lit(0)
-        for b in range(16):
-            vote = F.aggregate(hs, F.lit(0).cast("bigint"), voter(b))
-            out = out + F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        blocks.append(out.cast("bigint"))
-    return F.array(*blocks)
-
-
 def gram_codes(grams: Column) -> Column:
     """Exact int64 encoding of ≤3-char grams: code = ((c1+1)·2^21 + (c2+1))
     ·2^21 + (c3+1), missing chars → 0.  Codepoints are < 0x110000 < 2^21−1,

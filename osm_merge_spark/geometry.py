@@ -1,4 +1,4 @@
-"""Vectorized numpy geometry kernels + a WKT codec.
+"""Vectorized numpy geometry kernels and their Arrow codec.
 
 No geometry library ships in this environment, so every kernel the reference
 gets from shapely/pyproj is re-derived here as batch numpy over Arrow data:
@@ -8,9 +8,11 @@ gets from shapely/pyproj is re-derived here as batch numpy over Arrow data:
 - slope/angle replaces `osm_merge/conflator.py:471-563`;
 - point-in-polygon replaces the shapely `contains` gates
   (`osm_merge/conflatePOI.py:405-407`, `geosupport.py:201-224`);
-- simplification replaces `shapely.simplify` use (`utilities/mvum.py:236-242`);
-- the WKT codec is the span-table boundary format (FIXTURES.md §1: `kind='geom'`
-  spans carry WKT text).
+- simplification replaces `shapely.simplify` use (`utilities/mvum.py:236-242`).
+
+Geometry text (the span table's WKT, GeoJSON coordinates) is not decoded
+here: :func:`osm_merge_spark.functions.geo.geom_from_wkt` turns it into the
+flat ``array<double>`` in the JVM, and the kernels read that array.
 
 Batch layout: ragged geometry batches travel as ``(flat_xy, offsets)`` —
 ``flat_xy`` is an (N, 2) float64 array of every vertex of every row
@@ -22,92 +24,13 @@ zero-copy on the way in and never looping per row.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-
-# geometry kind codes (engine-wide)
-KIND_POINT = 1
-KIND_LINESTRING = 2
-KIND_POLYGON = 3
-
-_KIND_NAME = {KIND_POINT: "POINT", KIND_LINESTRING: "LINESTRING", KIND_POLYGON: "POLYGON"}
-_NAME_KIND = {v: k for k, v in _KIND_NAME.items()}
 
 M_PER_DEG_LAT = 110_540.0
 M_PER_DEG_LON_EQ = 111_320.0
 EARTH_R = 6_371_008.8
-
-
-# ---------------------------------------------------------------------------
-# WKT codec (vectorized over pandas string ops; ingest/egress boundary only)
-# ---------------------------------------------------------------------------
-
-_NUM_RE = re.compile(r"-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?")
-
-
-def parse_wkt(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """WKT strings → (kinds int8 (n,), offsets int64 (n+1,), flat_xy (N,2)).
-
-    Supports POINT / LINESTRING / POLYGON (outer ring only — the reference
-    conflates building outer rings, `conflateBuildings.py:106-112`).
-    Null/empty/unknown rows become zero-length geometries of kind 0.
-    """
-    s = series.fillna("").astype(str)
-    head = s.str.extract(r"^\s*([A-Z]+)", expand=False)
-    kinds = head.map(_NAME_KIND).fillna(0).astype(np.int8).to_numpy()
-
-    nums = s.str.findall(_NUM_RE)
-    counts = nums.str.len().fillna(0).astype(np.int64).to_numpy()
-    counts = np.where(kinds == 0, 0, counts)
-    flat: list[str] = []
-    for i, lst in enumerate(nums.to_numpy()):
-        if kinds[i] != 0 and lst:
-            flat.extend(lst)
-    vals = pd.to_numeric(pd.Series(flat), errors="coerce").to_numpy(dtype=np.float64) if flat else np.empty(0)
-    # per-row odd-count trim: a malformed row with an odd number of
-    # coordinates drops ITS last value only — a global trim would shift every
-    # subsequent row's coordinates by one.
-    odd = counts % 2 == 1
-    if odd.any():
-        ends = np.cumsum(counts)
-        mask = np.ones(len(vals), dtype=bool)
-        mask[ends[odd] - 1] = False
-        vals = vals[mask]
-        counts = counts - odd.astype(np.int64)
-    flat_xy = vals.reshape(-1, 2)
-    offsets = np.zeros(len(s) + 1, dtype=np.int64)
-    np.cumsum(counts // 2, out=offsets[1:])
-    return kinds, offsets, flat_xy
-
-
-def format_wkt(kinds: np.ndarray, offsets: np.ndarray, flat_xy: np.ndarray, ndigits: int = 7) -> pd.Series:
-    """Inverse of :func:`parse_wkt` (vectorized string assembly)."""
-    n = len(offsets) - 1
-    if flat_xy.shape[0]:
-        coords = pd.Series(
-            np.char.add(
-                np.char.add(np.round(flat_xy[:, 0], ndigits).astype(str), " "),
-                np.round(flat_xy[:, 1], ndigits).astype(str),
-            )
-        )
-        row_of = np.repeat(np.arange(n), np.diff(offsets))
-        joined = coords.groupby(row_of).agg(lambda v: ",".join(v))
-    else:
-        joined = pd.Series(dtype=object)
-    out = pd.Series([""] * n, dtype=object)
-    for i, txt in joined.items():
-        k = kinds[i]
-        if k == KIND_POINT:
-            out.iloc[i] = f"POINT({txt})"
-        elif k == KIND_LINESTRING:
-            out.iloc[i] = f"LINESTRING({txt})"
-        elif k == KIND_POLYGON:
-            out.iloc[i] = f"POLYGON(({txt}))"
-    return out
 
 
 def ragged_from_arrow(geoms: pa.Array) -> tuple[np.ndarray, np.ndarray]:

@@ -278,15 +278,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def fingerprint_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Rolling-hash fingerprint dedup (cheap first-pass before LSH)."""
-    return (
-        docs.select(F.col(id_col), TX.doc_fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("dup_count"))
-    )
-
-
 def embedding_neardup_pairs(
     docs: DataFrame,
     dim: int,

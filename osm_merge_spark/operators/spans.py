@@ -12,18 +12,17 @@ original spans column as provenance; ``features_to_spans`` re-emits the spans
 decoded columns, so the invariant holds by construction and is re-checked by
 ``span_signature`` equality in tests.
 
-All decoding is JVM-side (filter/transform over the spans array + one
-vectorized WKT parse); media decode itself is stubbed (see operators.media).
+All decoding is JVM-side (filter/transform over the spans array, and the
+WKT text decoded by ``functions.geo.geom_from_wkt``); media decode itself is
+stubbed (see operators.media).
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .. import geometry as G
+from ..functions.geo import geom_from_wkt
 
 
 def _spans_sorted(spans: Column) -> Column:
@@ -44,12 +43,6 @@ def span_signature(spans: Column | str) -> Column:
         lambda sp: F.concat_ws("\x01", sp["kind"], sp["text"], sp["media_ref"]),
     )
     return F.concat_ws("\x02", parts)
-
-
-@F.arrow_udf(T.ArrayType(T.DoubleType()))
-def _wkt_to_geom_udf(wkt: pa.Array) -> pa.Array:
-    kinds, offsets, flat = G.parse_wkt(wkt.to_pandas())
-    return G.arrow_from_ragged(offsets, flat)
 
 
 def spans_to_features(docs: DataFrame) -> DataFrame:
@@ -78,7 +71,7 @@ def spans_to_features(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         kv.alias("tags"),
-        _wkt_to_geom_udf(first_wkt).alias("geom"),
+        geom_from_wkt(first_wkt).alias("geom"),
         media_refs.alias("media_refs"),
         F.col("spans"),
     )

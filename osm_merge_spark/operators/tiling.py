@@ -40,11 +40,7 @@ def make_grid(
     """Task grid over the AOI bbox: tile_id, tile_x, tile_y, bounds columns.
     Driver-side arithmetic only for the (tiny) grid definition; the grid
     itself materializes distributed via sequence+explode."""
-    mid_lat = (min_lat + max_lat) / 2.0
-    dlat = tile_m / M_PER_DEG_LAT
-    dlon = tile_m / (111_320.0 * float(np.cos(np.radians(mid_lat))))
-    nx = int(np.ceil((max_lon - min_lon) / dlon))
-    ny = int(np.ceil((max_lat - min_lat) / dlat))
+    dlon, dlat, nx, ny = grid_params(min_lon, min_lat, max_lon, max_lat, tile_m)
     return (
         spark.range(1)
         .select(
@@ -153,32 +149,20 @@ def line_tiles_kernel(
     return rows, tid
 
 
-def _line_tiles_udf(min_lon: float, min_lat: float, dlon: float, dlat: float, nx: int, ny: int):
-    @F.arrow_udf(T.ArrayType(T.StringType()))
-    def _tiles(geoms: pa.Array) -> pa.Array:
-        flat, offsets = G.ragged_from_arrow(geoms)
-        # (row, tile) pairs sorted by row: each row's labels are one run
-        rows, tid = line_tiles_kernel(flat, offsets, min_lon, min_lat, dlon, dlat, nx, ny)
-        ends = np.zeros(len(geoms) + 1, dtype=np.int32)
-        np.cumsum(np.bincount(rows, minlength=len(geoms)), out=ends[1:])
-        labels = pc.binary_join_element_wise("Task_", pa.array(tid).cast(pa.string()), "")
-        return pa.ListArray.from_arrays(pa.array(ends), labels)
-
-    # deterministic; marked nondeterministic to force single materialization
-    return _tiles.asNondeterministic()
-
-
 def assign_lines_to_tiles(
     lines: DataFrame, min_lon: float, min_lat: float, max_lon: float, max_lat: float, tile_m: float = 10_000.0
 ) -> DataFrame:
-    """Polyline → (possibly many) tiles: exploded ``tile_id`` rows, the
-    reference's multi-tile routing (`tm_splitter.py:377-395`)."""
+    """Polyline → (possibly many) tiles: one row per (line, ``tile_id``), the
+    reference's multi-tile routing (`tm_splitter.py:377-395`), emitted by one
+    ``mapInArrow`` batch pass."""
     dlon, dlat, nx, ny = grid_params(min_lon, min_lat, max_lon, max_lat, tile_m)
-    return (
-        lines.withColumn("__tiles", _line_tiles_udf(min_lon, min_lat, dlon, dlat, nx, ny)(F.col("geom")))
-        .withColumn("tile_id", F.explode("__tiles"))
-        .drop("__tiles")
-    )
+
+    def tiles(batch: pa.RecordBatch):
+        flat, offsets = G.ragged_from_arrow(batch.column("geom"))
+        rows, tid = line_tiles_kernel(flat, offsets, min_lon, min_lat, dlon, dlat, nx, ny)
+        return rows, [pc.binary_join_element_wise("Task_", pa.array(tid).cast(pa.string()), "")]
+
+    return stage.with_batch_columns(lines, [T.StructField("tile_id", T.StringType())], tiles)
 
 
 def clip_rects_convex(

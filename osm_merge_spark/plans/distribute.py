@@ -68,55 +68,6 @@ def range_boundaries(primary_with_tiles: DataFrame, k: int) -> list[float]:
     return [float(b) for b in primary_with_tiles.approxQuantile("anchor_x", qs, 0.001)]
 
 
-def cost_weighted_boundaries(
-    primary_with_tiles: DataFrame, k: int, density_z: int = 14
-) -> list[float]:
-    """Cost-aware split points: each feature weighted by the local feature
-    density (count of anchors sharing its z-``density_z`` mercator column),
-    since candidate-pair work per feature scales with density.  This is the
-    same frequency pre-pass that feeds hot-cell salting, reused as the
-    range-partitioner's cost model — dense urban strips get narrower ranges.
-    """
-    if k <= 1:
-        return []
-    # 2D density: weight(feature) = anchors sharing its ~1-2 km cell, which
-    # is proportional to its candidate-pair degree
-    n = 1 << density_z
-    cx = F.floor((F.col("anchor_x") + 180.0) / 360.0 * n).cast("long")
-    cy = F.floor((F.col("anchor_y") + 90.0) / 180.0 * n).cast("long")
-    with_cell = primary_with_tiles.select("anchor_x", cx.alias("cx"), cy.alias("cy"))
-    dens = with_cell.groupBy("cx", "cy").agg(F.count("*").alias("w"))
-    weighted = with_cell.join(dens, ["cx", "cy"]).select("anchor_x", "w")
-    # single-pass weighted quantiles: histogram anchors into fine x-bins
-    # (one shuffle, tiny collect), cumulative-sum the bins driver-side.
-    # (A global Window.orderBy total sort + K filter/collect jobs would scan
-    # the corpus K+1 times through one task — the 100× scale-up killer.)
-    n_bins = 8192
-    lo_hi = weighted.agg(F.min("anchor_x").alias("lo"), F.max("anchor_x").alias("hi")).collect()[0]
-    lo, hi = float(lo_hi["lo"]), float(lo_hi["hi"])
-    if hi <= lo:
-        return [lo] * (k - 1)
-    width = (hi - lo) / n_bins
-    binned = (
-        weighted.withColumn(
-            "bin", F.least(F.floor((F.col("anchor_x") - lo) / width).cast("int"), F.lit(n_bins - 1))
-        )
-        .groupBy("bin")
-        .agg(F.sum("w").alias("w"))
-        .collect()
-    )
-    hist = np.zeros(n_bins)
-    for r in binned:
-        hist[r["bin"]] = r["w"]
-    cum = np.cumsum(hist)
-    total = cum[-1]
-    bounds = []
-    for i in range(1, k):
-        b = int(np.searchsorted(cum, total * i / k))
-        bounds.append(lo + (b + 1) * width)
-    return bounds
-
-
 def owned_range(boundaries: list[float], rank: int) -> tuple[float, float]:
     lo = boundaries[rank - 1] if rank > 0 else -1e9
     hi = boundaries[rank] if rank < len(boundaries) else 1e9

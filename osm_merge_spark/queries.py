@@ -2278,11 +2278,11 @@ def q_boundary_clip(spark, sf_dir):
 
     ring = np.array(_AOI_RING, dtype=np.float64)
 
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        n = len(lon)
-        poly = np.broadcast_to(ring, (n, *ring.shape))
-        return pd.Series(G.point_in_polygon(lon.to_numpy(), lat.to_numpy(), poly))
+    @F.arrow_udf(T.BooleanType())
+    def pip(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        poly = np.broadcast_to(ring, (len(lon), *ring.shape))
+        x, y = (a.to_numpy(zero_copy_only=False) for a in (lon, lat))
+        return pa.array(G.point_in_polygon(x, y, poly))
 
     pts = customer_points(spark, sf_dir)
     return pts.filter(pip("lon", "lat")).select("c_custkey", "lon", "lat").orderBy("c_custkey")

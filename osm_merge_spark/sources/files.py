@@ -24,56 +24,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import geometry as G
+from ..functions.geo import geom_from_geojson
 
 # ---------------------------------------------------------------------------
 # GeoJSON
 # ---------------------------------------------------------------------------
 
 
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
-def _flat_coords_udf(coords: pd.Series, kinds: pd.Series) -> pd.Series:
-    """JSON coordinate text → flat [x0,y0,x1,y1,...] (Point/LineString)."""
-    import json
-
-    def load(v):
-        # schema merge can leave coordinates as nested JSON strings;
-        # unwrap until we reach real lists
-        while isinstance(v, str):
-            v = json.loads(v)
-        if isinstance(v, list):
-            return [load(x) for x in v]
-        return v
-
-    out = []
-    for c, k in zip(coords, kinds):
-        if c is None:
-            out.append([])
-            continue
-        v = load(json.loads(c) if isinstance(c, str) else c)
-        if k == "Point":
-            out.append([float(v[0]), float(v[1])])
-        else:  # LineString
-            out.append([float(x) for pt in v for x in pt[:2]])
-    return pd.Series(out)
-
-
 def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     """FeatureCollection file(s) → (feature_id, geom array<double>, kind,
     tags map).  Geometry kinds: Point/LineString (the shapes the reference
-    conflates); tags are the properties object's string values."""
+    conflates) and Polygon (its outer ring); any other kind decodes to an
+    empty geometry.  Tags are the properties object's string values."""
     raw = spark.read.option("multiLine", "true").json(path)
     feats = raw.select(F.explode("features").alias("f"))
     props = F.col("f.properties")
     geom_type = F.col("f.geometry.type")
     # coordinates arrive as string-ified nested arrays under schema merge;
-    # normalize via to_json + one vectorized parse
+    # normalize via to_json, decoded in the JVM
     coords_json = F.to_json(F.col("f.geometry.coordinates"))
 
     return feats.select(
         F.monotonically_increasing_id().alias("feature_id"),
         geom_type.alias("kind"),
-        _flat_coords_udf(coords_json, geom_type).alias("geom"),
+        geom_from_geojson(geom_type, coords_json).alias("geom"),
         F.from_json(F.to_json(props), "map<string,string>").alias("tags"),
     )
 
@@ -96,7 +70,7 @@ def read_geojson_lines(spark: SparkSession, path: str, n_chunks: int | None = No
     out = lines.select(
         F.xxhash64("value").alias("feature_id"),
         f["geometry"]["type"].alias("kind"),
-        _flat_coords_udf(f["geometry"]["coordinates"], f["geometry"]["type"]).alias("geom"),
+        geom_from_geojson(f["geometry"]["type"], f["geometry"]["coordinates"]).alias("geom"),
         f["properties"].alias("tags"),
     )
     if n_chunks:

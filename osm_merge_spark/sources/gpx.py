@@ -40,11 +40,13 @@ from __future__ import annotations
 
 from xml.sax.saxutils import escape
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from .. import geometry as G
+from ..functions.geo import geom_from_wkt
 
 _CENTROID_SCHEMA = T.StructType(
     [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
@@ -58,16 +60,17 @@ ICON_COLORS = {
 }
 
 
-@pandas_udf(_CENTROID_SCHEMA)
-def _centroid_udf(geom: pd.Series) -> pd.DataFrame:
+@F.arrow_udf(_CENTROID_SCHEMA)
+def _centroid_udf(geom: pa.Array) -> pa.Array:
     """Waypoint anchor per feature: polygon → planar shoelace centroid
     (shapely-centroid parity), point/line → vertex mean (a POINT is its
-    own mean; `osm2favorities.py:87-95` only special-cases Polygon)."""
-    from .. import geometry as G
-
-    _kinds, offsets, flat = G.parse_wkt(geom)
+    own mean; `osm2favorities.py:87-95` only special-cases Polygon).  An
+    empty geometry anchors at null."""
+    flat, offsets = G.ragged_from_arrow(geom)
     c = G.polygon_centroid(offsets, flat)
-    return pd.DataFrame({"lon": c[:, 0], "lat": c[:, 1]})
+    return pa.StructArray.from_arrays(
+        [pa.array(c[:, 0], from_pandas=True), pa.array(c[:, 1], from_pandas=True)], names=["lon", "lat"]
+    )
 
 
 def _icon_col(tags: Column) -> Column:
@@ -120,7 +123,7 @@ def favorite_waypoints(df: DataFrame, geom_col: str = "geom", tags_col: str = "t
     for k, v in ICON_COLORS.items():
         color_pairs += [F.lit(k), F.lit(v)]
     colors = F.create_map(*color_pairs)
-    c = _centroid_udf(F.col(geom_col))
+    c = _centroid_udf(geom_from_wkt(F.col(geom_col)))
     return (
         df.withColumn("__c", c)
         .withColumn("lon", F.col("__c.lon"))

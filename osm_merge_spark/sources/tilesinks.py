@@ -35,9 +35,13 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import geometry as G
+from ..functions.geo import geom_from_wkt
 
 # ---------------------------------------------------------------------------
 # Hilbert curve (public-domain algorithm, e.g. Wikipedia "Hilbert curve");
@@ -545,22 +549,15 @@ def read_mbtiles(spark: SparkSession, path: str) -> DataFrame:
 # .poly sink (osmosis polygon-filter format)
 # ---------------------------------------------------------------------------
 
-_POLY_SECTION_SCHEMA = T.StringType()
 
-
-@F.pandas_udf(_POLY_SECTION_SCHEMA)
-def _poly_section_udf(geom: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def _poly_section_udf(geom: pa.Array) -> pa.Array:
     """One .poly ring body per feature: indented ``lon   lat`` rows +
-    ``END`` (outer ring only — `geojson2poly.py:92-104` drops inners)."""
-    from .. import geometry as G
-
-    kinds, offsets, flat = G.parse_wkt(geom)
-    out = []
-    for i in range(len(kinds)):
-        pts = flat[offsets[i] : offsets[i + 1]]
-        body = "".join(f"    {pt[0]}   {pt[1]}\n" for pt in pts)
-        out.append(body + "END\n")
-    return pd.Series(out)
+    ``END`` (the ring decoded from a POLYGON is its outer one —
+    `geojson2poly.py:92-104` drops inners)."""
+    flat, offsets = G.ragged_from_arrow(geom)
+    rings = (flat[a:b].tolist() for a, b in zip(offsets[:-1], offsets[1:]))
+    return pa.array(["".join(f"    {x}   {y}\n" for x, y in ring) + "END\n" for ring in rings])
 
 
 def write_poly(df: DataFrame, path: str, header: str, geom_col: str = "geom", order_col: str | None = None) -> int:
@@ -568,13 +565,10 @@ def write_poly(df: DataFrame, path: str, header: str, geom_col: str = "geom", or
     header line, then per-feature 1-based index + ring body + END, trailing
     END.  Section text is formatted distributed; the (small) file is
     assembled in feature order via ``toLocalIterator``."""
-    sections = df.select(_poly_section_udf(F.col(geom_col)).alias("section"))
+    section = _poly_section_udf(geom_from_wkt(F.col(geom_col))).alias("section")
+    sections = df.select(section)
     if order_col:
-        sections = (
-            df.select(F.col(order_col).alias("__o"), _poly_section_udf(F.col(geom_col)).alias("section"))
-            .orderBy("__o")
-            .select("section")
-        )
+        sections = df.select(F.col(order_col).alias("__o"), section).orderBy("__o").select("section")
     n = 0
     with open(path, "w") as fd:
         fd.write(f"{header}\n")

@@ -137,6 +137,57 @@ def test_drop_degenerate_keep_points(spark):
     assert pts == {1, 2}
 
 
+def test_wkt_decode_kinds(spark):
+    """POINT, LINESTRING and POLYGON decode to their (outer-ring) vertices;
+    null, empty, EMPTY and other kinds to an empty array, never null."""
+    from osm_merge_spark.functions import geo as GEO
+
+    texts = [
+        "POINT(-105.5 40.25)",
+        "LINESTRING(-105 40,-104.99 40.01,-104.98 40.015)",
+        "POLYGON((-105 40,-104.9 40,-104.9 40.1,-105 40.1,-105 40))",
+        None,
+        "",
+        "POINT EMPTY",
+        "MULTIPOINT((1 2),(3 4))",
+        "LINESTRING M (1.0E-5 2.5e+3 7, .5 -4. 8)",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, wkt string")
+    got = [r.g for r in df.select("i", GEO.geom_from_wkt(F.col("wkt")).alias("g")).orderBy("i").collect()]
+    assert got == [
+        [-105.5, 40.25],
+        [-105.0, 40.0, -104.99, 40.01, -104.98, 40.015],
+        [-105.0, 40.0, -104.9, 40.0, -104.9, 40.1, -105.0, 40.1, -105.0, 40.0],
+        [],
+        [],
+        [],
+        [],
+        [1e-5, 2500.0, 0.5, -4.0],
+    ]
+
+
+def test_geojson_decode_matches_wkt(spark):
+    """GeoJSON coordinates share the WKT vertex grammar: the same geometry
+    decodes to the same array, also when a schema merge left the nested
+    coordinates as JSON strings."""
+    from osm_merge_spark.functions import geo as GEO
+
+    rows = [
+        ("Point", "[-105.5,39.5]", "POINT(-105.5 39.5)"),
+        ("LineString", "[[-105.0,40.0],[-104.99,40.01,1800.5]]", "LINESTRING(-105.0 40.0,-104.99 40.01)"),
+        ("LineString", '["[-105.0,40.0]","[-104.99,40.01]"]', "LINESTRING(-105.0 40.0,-104.99 40.01)"),
+        ("Polygon", "[[[0,0],[10,0],[10,10],[0,0]],[[2,2],[3,2],[3,3],[2,2]]]", "POLYGON((0 0,10 0,10 10,0 0))"),
+        ("MultiPoint", "[[1,2],[3,4]]", ""),
+        ("Point", None, None),
+    ]
+    df = spark.createDataFrame(rows, "kind string, coords string, wkt string")
+    got = df.select(
+        GEO.geom_from_geojson(F.col("kind"), F.col("coords")).alias("a"), GEO.geom_from_wkt(F.col("wkt")).alias("b")
+    ).collect()
+    assert [r.a for r in got] == [r.b for r in got]
+    assert [len(r.a) for r in got] == [2, 4, 4, 8, 0, 0]
+
+
 def test_gram_codes_exact_bijection(spark):
     """TX.gram_codes must be a bijection on <=3-char grams for any unicode
     input: per-doc distinct counts AND pairwise intersection sizes over the

@@ -1,29 +1,8 @@
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pytest
 
 from osm_merge_spark import geometry as G
-
-
-def test_wkt_roundtrip():
-    s = pd.Series(
-        [
-            "POINT(-105.5 40.25)",
-            "LINESTRING(-105 40,-104.99 40.01,-104.98 40.015)",
-            "POLYGON((-105 40,-104.9 40,-104.9 40.1,-105 40.1,-105 40))",
-            None,
-            "",
-        ]
-    )
-    kinds, offsets, flat = G.parse_wkt(s)
-    assert kinds.tolist() == [G.KIND_POINT, G.KIND_LINESTRING, G.KIND_POLYGON, 0, 0]
-    assert np.diff(offsets).tolist() == [1, 3, 5, 0, 0]
-    assert flat[0].tolist() == [-105.5, 40.25]
-    out = G.format_wkt(kinds, offsets, flat)
-    kinds2, offsets2, flat2 = G.parse_wkt(out)
-    assert np.array_equal(kinds[:3], kinds2[:3])
-    assert np.allclose(flat, flat2)
 
 
 def test_arrow_codec_nulls_slices_roundtrip():

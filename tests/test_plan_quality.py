@@ -6,6 +6,7 @@ boundaries, filter/column pushdown reaching the parquet scans, partial
 aggregation before exchanges where the operator contract promises it."""
 
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,6 +99,32 @@ def test_range_slice_evaluates_extents_once(spark):
     python_nodes = len(re.findall(r"\(\d+\) (?:MapInArrow|ArrowEvalPython)", plan))
     assert 1 <= python_nodes <= branches
     assert "ArrowEvalPython" not in plan
+
+
+def test_spans_decode_stays_jvm_side(spark):
+    # the WKT geometry span decodes in Catalyst: no Python stage of any kind
+    from osm_merge_spark.operators import spans as SP
+
+    plan = plan_of(SP.spans_to_features(synth.documents_spans(spark, SF)))
+    assert not re.search(r"ArrowEvalPython|MapInArrow|BatchEvalPython", plan)
+
+
+def test_line_tiles_one_batch_function(spark):
+    # the tile rows come out of one batch function: no scalar UDF, no explode
+    from osm_merge_spark.operators import tiling as TL
+
+    aoi = (synth.LON0, synth.LAT0, synth.LON0 + synth.LON_SPAN, synth.LAT0 + synth.LAT_SPAN)
+    plan = plan_of(TL.assign_lines_to_tiles(synth.osm_ways(spark, SF), *aoi, tile_m=20_000.0))
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+    assert "ArrowEvalPython" not in plan
+    assert "Generate" not in plan
+
+
+def test_no_nondeterministic_guards():
+    """Python kernels cross the boundary as batch functions or arrow_udfs,
+    each evaluated once by construction; none needs the guard."""
+    pkg = Path(C.__file__).resolve().parents[1]
+    assert [str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if "asNondeterministic" in p.read_text()] == []
 
 
 def test_flagship_best_match_partial_agg(flagship_plan):

@@ -1,14 +1,17 @@
-"""Property-based tests (hypothesis) for the pure-numpy kernels — the parts
-whose correctness every distributed operator inherits.  No SparkSession:
-these run the Arrow-batch kernels directly on adversarial inputs."""
+"""Property-based tests (hypothesis) for the kernels whose correctness
+every distributed operator inherits.  The NumPy kernels run directly on
+adversarial inputs; the JVM geometry-text decoder runs one Spark job per
+property over every drawn row."""
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from osm_merge_spark import geometry as G
 from osm_merge_spark import grid as GR
+from osm_merge_spark.functions.geo import geom_from_wkt
+from osm_merge_spark.sources import synth
 from osm_merge_spark.sources import tilesinks as TS
 
 coord = st.floats(min_value=-179.9, max_value=179.9, allow_nan=False, width=64)
@@ -16,39 +19,57 @@ lat = st.floats(min_value=-84.9, max_value=84.9, allow_nan=False, width=64)
 line = st.lists(st.tuples(coord, lat), min_size=2, max_size=12)
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.lists(line, min_size=1, max_size=8))
-def test_wkt_round_trip(lines):
-    wkt = pd.Series(
-        ["LINESTRING(" + ",".join(f"{round(x,7)} {round(y,7)}" for x, y in pts) + ")" for pts in lines]
-    )
-    kinds, offsets, flat = G.parse_wkt(wkt)
-    assert offsets[-1] == sum(len(p) for p in lines)
-    back = G.format_wkt(kinds, offsets, flat)
-    k2, o2, f2 = G.parse_wkt(back)
-    assert (o2 == offsets).all()
-    assert np.allclose(f2, flat, atol=1e-7)
+def _drawn(strategy, n: int) -> list:
+    """Up to ``n`` examples of ``strategy``, drawn up front so that one
+    Spark job checks them all."""
+    out = []
+
+    @settings(max_examples=n, deadline=None, database=None)
+    @given(strategy)
+    def draw(x):
+        out.append(x)
+
+    draw()
+    return out
 
 
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=20), st.data())
-def test_parse_wkt_survives_malformed_rows(counts, data):
-    """A malformed (odd-coordinate) row must corrupt only itself — every
-    other row keeps its exact coordinates (the per-row trim invariant)."""
-    rows, truth = [], []
-    for c in counts:
-        pts = [(round(data.draw(coord), 6), round(data.draw(lat), 6)) for _ in range(max(c, 2))]
-        body = ",".join(f"{x} {y}" for x, y in pts)
-        if c % 3 == 0:  # malform: append a dangling number → odd count
-            rows.append(f"LINESTRING({body},5.0)")
-        else:
-            rows.append(f"LINESTRING({body})")
-        truth.append(np.array(pts))
-    kinds, offsets, flat = G.parse_wkt(pd.Series(rows))
-    for i, want in enumerate(truth):
-        got = flat[offsets[i] : offsets[i + 1]]
-        assert len(got) >= len(want)
-        assert np.allclose(got[: len(want)], want, atol=1e-9)
+def _decoded(spark, texts: list[str]) -> list[list[float]]:
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, wkt string")
+    return [r.g for r in df.select("i", geom_from_wkt(F.col("wkt")).alias("g")).orderBy("i").collect()]
+
+
+def test_wkt_round_trip(spark):
+    """Lines written as WKT, by Python and by the engine's own JVM encoder
+    (the span table's geom spans), decode to exactly their coordinates."""
+    lines = [[(round(x, 7), round(y, 7)) for x, y in pts] for pts in _drawn(line, 200)]
+    flat = [[c for pt in pts for c in pt] for pts in lines]
+    texts = ["LINESTRING(" + ",".join(f"{x} {y}" for x, y in pts) + ")" for pts in lines]
+    assert _decoded(spark, texts) == flat
+    geoms = spark.createDataFrame(list(enumerate(flat)), "i int, geom array<double>")
+    encoded = geoms.select("i", geom_from_wkt(synth._wkt_linestring(F.col("geom"))).alias("g"))
+    assert [r.g for r in encoded.orderBy("i").collect()] == flat
+
+
+@st.composite
+def _malformed_row(draw):
+    """(WKT line, its true flat coordinates): some rows carry a dangling
+    number at a drawn vertex position, some a Z ordinate on every vertex."""
+    pts = draw(st.lists(st.tuples(coord, lat), min_size=1, max_size=30))
+    pts = [(round(x, 6), round(y, 6)) for x, y in pts]
+    vertices = [f"{x} {y}" for x, y in pts]
+    shape = draw(st.sampled_from(["clean", "dangling", "z"]))
+    if shape == "dangling":
+        vertices.insert(draw(st.integers(0, len(vertices))), "5.0")
+    elif shape == "z":
+        vertices = [f"{v} {draw(coord)}" for v in vertices]
+    return "LINESTRING(" + ",".join(vertices) + ")", [c for pt in pts for c in pt]
+
+
+def test_wkt_decode_survives_malformed_rows(spark):
+    """A malformed row (a dangling number that completes no vertex) loses
+    only that number, and every other row keeps its exact coordinates."""
+    rows = _drawn(_malformed_row(), 300)
+    assert _decoded(spark, [text for text, _ in rows]) == [truth for _, truth in rows]
 
 
 @settings(max_examples=100, deadline=None)

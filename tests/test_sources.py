@@ -72,6 +72,27 @@ def test_geojson_roundtrip(spark, tmpdir):
     assert line["properties"]["name"] == "Elk Road"
 
 
+def test_geojson_polygon_and_other_kinds(spark, tmpdir):
+    """A Polygon feature decodes to its outer ring and a kind the engine
+    does not conflate to an empty geometry; neither fails the read."""
+    feats = [
+        {"type": "Feature", "properties": {"name": "lot"},
+         "geometry": {"type": "Polygon", "coordinates": [[[0, 0], [1, 0], [1, 1], [0, 0]],
+                                                         [[0.2, 0.2], [0.3, 0.2], [0.3, 0.3], [0.2, 0.2]]]}},
+        {"type": "Feature", "properties": {"name": "pts"},
+         "geometry": {"type": "MultiPoint", "coordinates": [[5, 5], [6, 6]]}},
+        {"type": "Feature", "properties": {"name": "pt"},
+         "geometry": {"type": "Point", "coordinates": [-105.5, 39.5]}},
+    ]
+    with open(f"{tmpdir}/fc.geojson", "w") as f:
+        json.dump({"type": "FeatureCollection", "features": feats}, f)
+    with open(f"{tmpdir}/feats.ndjson", "w") as f:
+        f.writelines(json.dumps(ft) + "\n" for ft in feats)
+    want = {"lot": [0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 0.0], "pts": [], "pt": [-105.5, 39.5]}
+    for df in (FL.read_geojson(spark, f"{tmpdir}/fc.geojson"), FL.read_geojson_lines(spark, f"{tmpdir}/feats.ndjson")):
+        assert {r["tags"]["name"]: r["geom"] for r in df.collect()} == want
+
+
 OSM_XML = """<?xml version='1.0' encoding='UTF-8'?>
 <osm version="0.6">
   <node id="101" version="2" lon="-105.0" lat="40.0"/>

@@ -63,6 +63,28 @@ def test_spans_geometry_matches_source(spark):
         assert np.allclose(r["geom"], r["geom_decoded"], atol=1e-6)
 
 
+def _decode_geom_span(spark, wkt: str) -> list[float]:
+    span = "struct<kind:string,text:string,media_ref:string,offset:int>"
+    docs = spark.createDataFrame(
+        [("doc-1", [("tag", "highway=track", "", 0), ("geom", wkt, "", 1)])],
+        f"doc_id string, spans array<{span}>",
+    )
+    return SP.spans_to_features(docs).first()["geom"]
+
+
+def test_spans_polygon_decodes_outer_ring_only(spark):
+    """An inner ring (a hole) is not appended to the outer one."""
+    geom = _decode_geom_span(spark, "POLYGON((0 0,10 0,10 10,0 0),(2 2,3 2,3 3,2 2))")
+    assert geom == [0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 0.0]
+
+
+def test_spans_wkt_drops_z_and_m(spark):
+    """Each vertex keeps its first two ordinates: the Z of one vertex is not
+    read as the X of the next."""
+    assert _decode_geom_span(spark, "LINESTRING Z (1 2 3, 4 5 6)") == [1.0, 2.0, 4.0, 5.0]
+    assert _decode_geom_span(spark, "LINESTRING ZM (1 2 3 4, 5 6 7 8)") == [1.0, 2.0, 5.0, 6.0]
+
+
 def test_conflation_over_spans_table(spark):
     """The flagship lifecycle: spans docs as the *secondary* input feed the
     conflation core after decode; debug tags appended; invariant holds."""

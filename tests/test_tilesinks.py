@@ -174,6 +174,18 @@ def test_poly_sink(spark, tmp_path):
     assert "    5.0   5.0" in text
 
 
+def test_poly_sink_writes_outer_ring_only(spark, tmp_path):
+    # `geojson2poly.py:92-104` writes a polygon's outer ring; the hole's
+    # vertices must not be appended to it
+    df = spark.createDataFrame(
+        [(1, "POLYGON((0 0,10 0,10 10,0 0),(2 2,3 2,3 3,2 2))")], "id int, geom string"
+    )
+    path = str(tmp_path / "holed.poly")
+    assert TS.write_poly(df, path, header="holed") == 1
+    lines = open(path).read().splitlines()
+    assert lines == ["holed", "1", "    0.0   0.0", "    10.0   0.0", "    10.0   10.0", "    0.0   0.0", "END", "END"]
+
+
 def test_directory_serde_gzip_deterministic():
     entries = [(i * 3, i * 10, 10, 1) for i in range(100)]
     b1 = TS.serialize_directory(entries)
